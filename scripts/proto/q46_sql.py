@@ -70,7 +70,7 @@ sig AS (
     list_transform(generate_series(1, 16), i ->
       list_aggregate(list_transform(sh, x ->
         ((((2654435769 * i) % 1073741789) | 1) * CAST(x % 4294967296 AS BIGINT)
-          + (2245893631 * i + 668197679) % 1073741789) % 4294967311), 'min')) AS sig
+          + (2246822507 * i + 668265263) % 1073741789) % 4294967311), 'min')) AS sig
   FROM sh),
 banded AS (
   SELECT doc_id, b.band_idx, sig[b.band_idx*4+1 : b.band_idx*4+4] AS band

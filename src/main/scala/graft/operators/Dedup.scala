@@ -71,9 +71,17 @@ object Dedup {
   /** Classic 32-bit-domain MinHash family: h_i(x) = (a_i·x32 + b_i)
     * mod p, p prime > 2^32; coefficients below 2^30 from the index —
     * a_i·x32 + b_i < 2^62, no Long overflow. */
-  private val P = 4294967311L
-  private def aCoef(i: Int): Long = ((0x9E3779B9L * (i + 1)) % 1073741789L) | 1L
-  private def bCoef(i: Int): Long = (0x85EBCA6BL * (i + 1) + 0x27D4EB2FL) % 1073741789L
+  private[graft] final val P = 4294967311L
+  /** Coefficient constants, shared with the DuckDB oracle's MinHash CTE
+    * (queries.DedupOps.sigBandedCtes) so the two cannot drift apart.
+    * Untyped `final val`s are constants: scalac inlines them, so the
+    * hot loop still divides by a literal. */
+  private[graft] final val CoefPrime = 1073741789L
+  private[graft] final val AMul = 0x9E3779B9L
+  private[graft] final val BMul = 0x85EBCA6BL
+  private[graft] final val BAdd = 0x27D4EB2FL
+  private def aCoef(i: Int): Long = ((AMul * (i + 1)) % CoefPrime) | 1L
+  private def bCoef(i: Int): Long = (BMul * (i + 1) + BAdd) % CoefPrime
 
   private[operators] def minhashSig(sh: Array[Long], k: Int): Array[Long] = {
     val sig = Array.fill(k)(Long.MaxValue)

@@ -173,7 +173,7 @@ object SnapshotTable {
     base.filter(col(colName).cast("double").between(lo, hi))
   }
 
-  private def dataDir(path: String, s: Snapshot): String = s"$path/${s.dir}"
+  private[graft] def dataDir(path: String, s: Snapshot): String = s"$path/${s.dir}"
 
   /** Read the current snapshot. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -65,6 +65,9 @@ object StreamEnrich {
     * join itself is what gives Spark BOTH state-eviction horizons. */
   def callsWithTowerLoadBinned(calls: DataFrame, probes: DataFrame,
                                toleranceSecs: Long): DataFrame = {
+    // the two-bucket cover needs a positive bin width: 0 divides every
+    // bucket key by zero — reject it when the plan is built
+    require(toleranceSecs > 0, s"toleranceSecs must be positive, got $toleranceSecs")
     val tolUs = toleranceSecs * 1000000L
     val c = calls
       .withColumn("_cus", unix_micros(col("call_ts")))

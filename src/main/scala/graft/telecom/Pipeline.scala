@@ -51,15 +51,19 @@ object Pipeline {
     direct ++ direct.flatMap(downstreamOf(_, graph))
   }
 
-  /** Incremental MERGE emulation on plain Parquet (SURVEY.md §7.4 #4):
-    * read existing target (if any), union the increment, keep the
-    * newest version per key via an ordered dedup window, write back.
-    * Idempotent: re-merging the same increment is a no-op, which is
-    * what lets at-least-once upstreams and 3-day lookback reprocessing
-    * coexist (reference ST5). At scale the window shuffle is bounded
-    * by (existing ∩ affected partitions) + increment when targets are
-    * date-partitioned and callers pre-filter — same contract as the
-    * reference's incremental models.
+  /** Incremental MERGE on plain Parquet (SURVEY.md §7.4 #4): keep the
+    * newest `versionCol` row per key of (current target ∪ increment)
+    * and rewrite the target with it. The whole target is read and
+    * rewritten on every merge, so a merge's cost tracks the target,
+    * not the increment. Contracts:
+    *  - Idempotent: re-merging an applied increment is a no-op, which
+    *    lets at-least-once upstreams and 3-day lookback reprocessing
+    *    coexist (reference ST5).
+    *  - The first merge into an absent target dedups the increment
+    *    too: a key that arrives twice lands once, at its newest
+    *    version.
+    *  - The rewrite is [[mergeBuckets]] files hash-bucketed by the
+    *    key, written in parallel; each key lives in exactly one file.
     */
   def mergeParquet(spark: SparkSession, increment: DataFrame, path: String,
                    keyCols: Seq[String], versionCol: String,
@@ -71,20 +75,8 @@ object Pipeline {
     val bakPath = Paths.get(path + "_bak")
     if (!Files.exists(target) && Files.exists(bakPath))
       Files.move(bakPath, target, StandardCopyOption.REPLACE_EXISTING)
-    val merged =
-      if (Files.exists(target)) {
-        val existing = spark.read.parquet(path)
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(versionCol).desc)
-        // schema evolution: an increment that adds (or drops) columns
-        // aligns by name with null back-fill — old rows get null for
-        // new columns, which is the reference's dbt on_schema_change:
-        // append_new_columns contract
-        existing.unionByName(increment, allowMissingColumns = allowSchemaEvolution)
-          .withColumn("_merge_rn", row_number().over(w))
-          .filter(col("_merge_rn") === 1)
-          .drop("_merge_rn")
-      } else increment
+    val merged = keepLatest(spark, if (Files.exists(target)) Some(path) else None,
+      increment, keyCols, versionCol, allowSchemaEvolution)
     // write to a sibling tmp dir then atomically swap (plain-Parquet
     // stand-in for Iceberg's commit; crash before swap leaves the old
     // snapshot intact)
@@ -100,25 +92,57 @@ object Pipeline {
     org.apache.commons.io.FileUtils.deleteQuietly(bak.toFile)
   }
 
-  /** Incremental merge with SNAPSHOT history: the same keep-latest
-    * merge as [[mergeParquet]], but committed as a new
-    * sources.SnapshotTable version — every merge becomes
-    * time-travelable, and expire/rollback apply (the Iceberg
+  /** Incremental merge with SNAPSHOT history: [[mergeParquet]]'s
+    * keep-latest step and contracts over the current snapshot,
+    * committed as a new sources.SnapshotTable version — every merge
+    * becomes time-travelable, and expire/rollback apply (the Iceberg
     * snapshot semantics the single-version `_bak` swap lacks). */
   def mergeSnapshot(spark: SparkSession, increment: DataFrame, path: String,
                     keyCols: Seq[String], versionCol: String,
                     nowMs: Long = System.currentTimeMillis()): Long = {
     import graft.sources.SnapshotTable
-    val merged =
-      if (SnapshotTable.snapshots(path).nonEmpty) {
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(versionCol).desc)
-        SnapshotTable.read(spark, path).unionByName(increment)
-          .withColumn("_merge_rn", row_number().over(w))
-          .filter(col("_merge_rn") === 1)
-          .drop("_merge_rn")
-      } else increment
-    SnapshotTable.commit(spark, merged, path, nowMs)
+    val current = SnapshotTable.snapshots(path).lastOption.map(SnapshotTable.dataDir(path, _))
+    SnapshotTable.commit(spark,
+      keepLatest(spark, current, increment, keyCols, versionCol, allowSchemaEvolution = false),
+      path, nowMs)
+  }
+
+  /** The keep-latest step both merges share: (parquet at `targetDir`,
+    * if any) ∪ increment, hash-partitioned by the key into
+    * [[mergeBuckets]] partitions, newest version per key. AQE coalesces
+    * a small implicit shuffle into one task but never one whose count
+    * was given, so the window and the parquet encode run on every
+    * core; the hash partitioning already satisfies the window, so no
+    * second exchange is planned. With `allowSchemaEvolution` an
+    * increment that adds (or drops) columns aligns by name with null
+    * back-fill (the reference's dbt on_schema_change:
+    * append_new_columns contract). */
+  private def keepLatest(spark: SparkSession, targetDir: Option[String],
+                         increment: DataFrame, keyCols: Seq[String], versionCol: String,
+                         allowSchemaEvolution: Boolean): DataFrame = {
+    val union = targetDir.fold(increment)(dir =>
+      spark.read.parquet(dir).unionByName(increment, allowMissingColumns = allowSchemaEvolution))
+    val keys = keyCols.map(col)
+    val w = Window.partitionBy(keys: _*).orderBy(col(versionCol).desc)
+    union.repartition(mergeBuckets(spark, targetDir), keys: _*)
+      .withColumn("_merge_rn", row_number().over(w))
+      .filter(col("_merge_rn") === 1)
+      .drop("_merge_rn")
+  }
+
+  /** Bucket (and output file) count of a merge into `targetDir`:
+    * max(session cores, ceil(target bytes / maxPartitionBytes)). Large
+    * targets get files about the size a reader splits on; small ones
+    * still use every core. The size is one content-summary call on the
+    * directory — not Tables' per-tick memo, since every merge rewrites
+    * the directory it would have memoized. */
+  private[graft] def mergeBuckets(spark: SparkSession, targetDir: Option[String]): Int = {
+    val bytes = targetDir.fold(0L) { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+    }
+    val split = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
+    math.max(spark.sparkContext.defaultParallelism.toLong, (bytes + split - 1) / split).toInt
   }
 
   /** Watermark store for incremental pulls (reference

@@ -114,6 +114,34 @@ class DedupSpec extends SparkSpec {
     assert(sh(0L) === sh(1L))
   }
 
+  test("oracle SQL mirrors the kernels: no negative divisor, MinHash coefficients equal Dedup's") {
+    // a Long literal past bit 62 prints negative: rotl-by-1's wrap-down
+    // divisor once read `// -9223372036854775808`, which DuckDB floors
+    // to 0/-1 instead of the wrapped top bit
+    val negDivisor = """(?://|/|%)\s*-\s*\d""".r
+    graft.SparkEntry.oracleSql.foreach { case (name, sql) =>
+      assert(negDivisor.findFirstIn(sql).isEmpty, s"$name has a negative divisor")
+    }
+    // the kernel's family read back through minhashSig: a lone shingle
+    // x gives h_i = (a_i·x + b_i) mod P, so x = 0 yields b_i, x = 1 a_i + b_i
+    val b = Dedup.minhashSig(Array(0L), 16)
+    val ab = Dedup.minhashSig(Array(1L), 16)
+    val family = ("""\(\(\(\((\d+) \* i\) % (\d+)\) \| 1\) \* CAST\(x % 4294967296 AS BIGINT\)""" +
+      """\s+\+ \((\d+) \* i \+ (\d+)\) % (\d+)\) % (\d+)""").r
+    val sigSqls = graft.SparkEntry.oracleSql.filter(_._2.contains("'min')) AS sig"))
+    assert(sigSqls.size >= 13, sigSqls.keys)
+    sigSqls.foreach { case (name, sql) =>
+      val m = family.findFirstMatchIn(sql).getOrElse(fail(s"$name: no MinHash family"))
+      val Seq(aMul, aMod, bMul, bAdd, bMod, p) = (1 to 6).map(g => BigInt(m.group(g)))
+      (1 to 16).foreach { i =>
+        val bi = (bMul * i + bAdd) % bMod
+        val ai = ((aMul * i) % aMod) | BigInt(1)
+        assert(bi % p === BigInt(b(i - 1)), s"$name: b_$i")
+        assert((ai + bi) % p === BigInt(ab(i - 1)), s"$name: a_$i")
+      }
+    }
+  }
+
   test("reliable checkpoint: configured dir switches cuts to fault-tolerant checkpoints") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)

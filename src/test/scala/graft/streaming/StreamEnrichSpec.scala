@@ -113,6 +113,16 @@ class StreamEnrichSpec extends SparkSpec {
     assert(ri.nonEmpty)
   }
 
+  test("binned batch face rejects a non-positive tolerance at plan time") {
+    val calls = callRows.toDF("event_id", "tower_id", "call_ts")
+    val probes = probeRows.toDF("tower_id", "probe_ts", "load_pct")
+    Seq(0L, -600L).foreach { tol =>
+      val e = intercept[IllegalArgumentException](
+        StreamEnrich.callsWithTowerLoadBinned(calls, probes, toleranceSecs = tol))
+      assert(e.getMessage.contains("toleranceSecs"))
+    }
+  }
+
   test("stream-stream join state EVICTS: rows plateau as watermarks advance") {
     implicit val sqlCtx = spark.sqlContext
     val cMem = MemoryStream[(String, String, Timestamp)]

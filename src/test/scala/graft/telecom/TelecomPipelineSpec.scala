@@ -166,6 +166,19 @@ class TelecomPipelineSpec extends SparkSpec {
     assert(out.toSeq === Seq(("k1", 2L, "a2"), ("k2", 1L, "b"), ("k3", 1L, "c")))
   }
 
+  test("first merge into an absent target keeps only the newest version of each key") {
+    val dir = java.nio.file.Files.createTempDirectory("merge-first").toString
+    val inc = Seq(("k1", 1L, "old"), ("k1", 2L, "new"), ("k2", 1L, "b"))
+      .toDF("id", "v", "payload")
+    val newest = Seq(("k1", 2L, "new"), ("k2", 1L, "b"))
+    Pipeline.mergeParquet(spark, inc, s"$dir/parquet", Seq("id"), "v")
+    assert(spark.read.parquet(s"$dir/parquet").as[(String, Long, String)]
+      .collect().sortBy(_._1).toSeq === newest)
+    Pipeline.mergeSnapshot(spark, inc, s"$dir/snapshot", Seq("id"), "v", nowMs = 1000)
+    assert(graft.sources.SnapshotTable.read(spark, s"$dir/snapshot")
+      .as[(String, Long, String)].collect().sortBy(_._1).toSeq === newest)
+  }
+
   test("incremental merge with schema evolution: new column null-fills old rows") {
     val path = java.nio.file.Files.createTempDirectory("merge-evo").toString + "/t"
     Pipeline.mergeParquet(spark,
