@@ -33,6 +33,9 @@ import org.apache.spark.sql.SparkSession
   *     very last stdout line, so the driver's tail-parser always
   *     sees it (BENCH_r03 recorded parsed:null because shutdown
   *     logging could trail the metric line).
+  *   - A failed warm-up or query does not stop the run: every query
+  *     is still timed and every line printed. Then the process exits
+  *     1, naming the failures on stderr, as graft.Verify does.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -49,6 +52,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val warmupFailed = scala.collection.mutable.ArrayBuffer[String]()
     // warm-up: touch every table + run one small query end to end
     // (codegen, parquet footer reads, shuffle machinery), and
     // pre-materialize the generated fixtures — they stand in for the
@@ -68,6 +72,7 @@ object Bench {
       // otherwise silently absorb materialization into its timer
       case t: Throwable =>
         System.err.println(s"[bench] warm-up failed: $t")
+        warmupFailed += "warm-up"
     }
 
     // Force queries through the NOOP SINK, not count(): count() lets
@@ -271,5 +276,10 @@ object Bench {
     stateLine.foreach(println)
     println(summary)
     System.out.flush()
+    val failures = warmupFailed ++ results.collect { case (n, v) if v < 0 => n }
+    if (failures.nonEmpty) {
+      System.err.println(s"[bench] ${failures.size} failed: ${failures.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

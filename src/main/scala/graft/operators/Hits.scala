@@ -127,8 +127,17 @@ object Hits {
     * P-row stitches (SuffixRank) this repo already bounds.
     * Arithmetic is unchanged (same `* Scale DIV max` Long expression,
     * max now a literal), so the fixed-point trajectory — and the
-    * oracle replay — is bit-identical. */
-  private def normalize(raw: DataFrame): DataFrame = {
+    * oracle replay — is bit-identical.
+    *
+    * Precondition, enforced: `raw` must be a checkpointed (or locally
+    * checkpointed) frame. An un-checkpointed one would re-execute its
+    * whole upstream lineage for the head() and again for every
+    * consumer of the result. */
+  private[operators] def normalize(raw: DataFrame): DataFrame = {
+    require(raw.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.isCheckpointed
+      case _ => false
+    }, "Hits.normalize needs a checkpointed frame (Lineage.cut)")
     val row = raw.agg(max(col("raw"))).head()
     val mx = if (row.isNullAt(0)) 1L else row.getLong(0)
     raw.select(col("id"), expr(s"raw * $Scale DIV $mx").as("score"))

@@ -703,13 +703,18 @@ object SuffixRank {
   /** Longest common prefix in CODE POINTS of two strings — the JVM
     * mirror of the graft_lcp expression (same mid-character backup:
     * a common UTF-16 prefix ending between the halves of a surrogate
-    * pair counts only the complete characters before it; on BMP
-    * input, common code units are common code points). */
+    * pair in EITHER string counts only the complete characters before
+    * it, also when the other string ends there with a lone high
+    * surrogate; on BMP input, common code units are common code
+    * points). A high surrogate that is lone in both strings stays
+    * common, as in graft_lcp, where UTF-8 encoding turns each into
+    * the same replacement byte. */
   private[operators] def lcpCodePoints(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0
     while (i < n && a.charAt(i) == b.charAt(i)) i += 1
-    if (i < a.length && i > 0 && Character.isHighSurrogate(a.charAt(i - 1)))
+    def pairSplitIn(s: String) = i < s.length && Character.isLowSurrogate(s.charAt(i))
+    if (i > 0 && Character.isHighSurrogate(a.charAt(i - 1)) && (pairSplitIn(a) || pairSplitIn(b)))
       i -= 1
     a.codePointCount(0, i)
   }

@@ -4,10 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions registering graft's native expressions
-  * (activate with spark.sql.extensions=graft.plans.GraftExtensions).
-  * The idiomatic plug-in point for custom Catalyst pieces — scalar
-  * expressions today; Rules/Strategies would hook in the same way.
+/** Session extensions (activate with
+  * spark.sql.extensions=graft.plans.GraftExtensions) — the idiomatic
+  * plug-in point for custom Catalyst pieces. They register graft's
+  * native expressions and aggregates as SQL functions, two optimizer
+  * rules ([[RewriteDotProduct]], [[RewriteBoundedLevenshtein]]), one
+  * AQE runtime optimizer rule ([[SmallSortInOnePartition]]) and one
+  * planner strategy (SessionizeStrategy).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -195,6 +198,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectOptimizerRule(_ => RewriteBoundedLevenshtein)
+    ext.injectRuntimeOptimizerRule(_ => SmallSortInOnePartition)
     ext.injectPlannerStrategy(_ => SessionizeStrategy)
   }
 }

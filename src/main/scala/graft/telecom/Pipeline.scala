@@ -90,6 +90,7 @@ object Pipeline {
     if (Files.exists(target)) Files.move(target, bak, StandardCopyOption.REPLACE_EXISTING)
     Files.move(Paths.get(tmp), target, StandardCopyOption.REPLACE_EXISTING)
     org.apache.commons.io.FileUtils.deleteQuietly(bak.toFile)
+    graft.Tables.recordSchema(spark, path, merged.schema)
   }
 
   /** Incremental merge with SNAPSHOT history: [[mergeParquet]]'s
@@ -102,9 +103,12 @@ object Pipeline {
                     nowMs: Long = System.currentTimeMillis()): Long = {
     import graft.sources.SnapshotTable
     val current = SnapshotTable.snapshots(path).lastOption.map(SnapshotTable.dataDir(path, _))
-    SnapshotTable.commit(spark,
-      keepLatest(spark, current, increment, keyCols, versionCol, allowSchemaEvolution = false),
-      path, nowMs)
+    val merged = keepLatest(spark, current, increment, keyCols, versionCol,
+      allowSchemaEvolution = false)
+    val v = SnapshotTable.commit(spark, merged, path, nowMs)
+    graft.Tables.recordSchema(spark,
+      SnapshotTable.dataDir(path, SnapshotTable.snapshots(path).last), merged.schema)
+    v
   }
 
   /** The keep-latest step both merges share: (parquet at `targetDir`,
@@ -116,12 +120,18 @@ object Pipeline {
     * second exchange is planned. With `allowSchemaEvolution` an
     * increment that adds (or drops) columns aligns by name with null
     * back-fill (the reference's dbt on_schema_change:
-    * append_new_columns contract). */
+    * append_new_columns contract).
+    *
+    * The target is read through graft.Tables' schema memo, and both
+    * merges record the schema they commit under the files they just
+    * wrote, so a merge into the result of the previous merge starts
+    * no schema-inference job. */
   private def keepLatest(spark: SparkSession, targetDir: Option[String],
                          increment: DataFrame, keyCols: Seq[String], versionCol: String,
                          allowSchemaEvolution: Boolean): DataFrame = {
     val union = targetDir.fold(increment)(dir =>
-      spark.read.parquet(dir).unionByName(increment, allowMissingColumns = allowSchemaEvolution))
+      graft.Tables.readParquet(spark, dir)
+        .unionByName(increment, allowMissingColumns = allowSchemaEvolution))
     val keys = keyCols.map(col)
     val w = Window.partitionBy(keys: _*).orderBy(col(versionCol).desc)
     union.repartition(mergeBuckets(spark, targetDir), keys: _*)

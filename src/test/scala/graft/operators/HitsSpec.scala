@@ -38,4 +38,12 @@ class HitsSpec extends SparkSpec {
     assert(scores(hubs) === scores(fh))
     assert(scores(auths) === scores(fa))
   }
+
+  test("normalize rejects an un-checkpointed frame and accepts a cut one") {
+    val raw = Seq((1L, 4L), (2L, 8L)).toDF("id", "raw")
+    val e = intercept[IllegalArgumentException](Hits.normalize(raw))
+    assert(e.getMessage.contains("checkpointed"))
+    val got = Hits.normalize(Lineage.cut(raw)).as[(Long, Long)].collect().sortBy(_._1)
+    assert(got.toSeq === Seq((1L, 500000L), (2L, 1000000L)))
+  }
 }

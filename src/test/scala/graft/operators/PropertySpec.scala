@@ -138,6 +138,9 @@ class PropertySpec extends SparkSpec {
       assert(got.withColumn("file", input_file_name())
         .groupBy("id").agg(countDistinct("file").as("files"))
         .filter(col("files") =!= 1).isEmpty, s"step $step: a key spans files")
+      // the merge records the schema it committed: the next merge
+      // reads the target without inferring it
+      assert(Tables.memoSchema(spark, dir) === Some(got.schema), s"step $step: recorded schema")
     }
   }
 

@@ -125,4 +125,21 @@ class SuffixRankSpec extends SparkSpec {
       .map { case ((id, k), gi) => (id, k, gi.toLong) }
     assert(got.sortBy(_._3).toSeq === expected)
   }
+
+  test("lcpCodePoints ≡ graft_lcp on lone surrogates, incl. one ending the shorter string") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val hi = "\uD83D"
+    val pair = "\uD83D\uDE00"
+    val cases = Seq(
+      ("ab" + hi, "ab" + pair) -> 2,          // shorter ends with a lone high surrogate
+      ("ab" + pair, "ab" + hi) -> 2,
+      ("ab" + hi, "ab" + hi + "c") -> 3,      // lone in both: one common code point
+      (hi + "x", hi + "y") -> 1,
+      ("a" + pair, "a" + hi + "\uDE01") -> 1) // different low halves
+    cases.foreach { case ((a, b), want) =>
+      val lcp = graft.plans.CommonPrefixLength(Literal(a), Literal(b)).eval()
+      assert(SuffixRank.lcpCodePoints(a, b) === want, s"lcp of ${a.map(_.toInt)}, ${b.map(_.toInt)}")
+      assert(lcp === want, "graft_lcp")
+    }
+  }
 }

@@ -143,6 +143,9 @@ class SnapshotTableSpec extends SparkSpec {
     Pipeline.mergeSnapshot(spark, day1, path, Seq("id"), "v", nowMs = 1000)
     Pipeline.mergeSnapshot(spark, day2, path, Seq("id"), "v", nowMs = 2000)
     Pipeline.mergeSnapshot(spark, day2, path, Seq("id"), "v", nowMs = 3000) // replay
+    // the merge records the schema of the snapshot it committed
+    val dir = SnapshotTable.dataDir(path, SnapshotTable.snapshots(path).last)
+    assert(graft.Tables.memoSchema(spark, dir) === Some(spark.read.parquet(dir).schema))
     val cur = SnapshotTable.read(spark, path).as[(String, Long, String)].collect().sortBy(_._1)
     assert(cur.toSeq === Seq(("k1", 2L, "a2"), ("k2", 1L, "b"), ("k3", 1L, "c")))
     // pre-merge state is still queryable
