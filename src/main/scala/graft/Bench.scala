@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON metrics line (driver contract).
@@ -33,26 +33,39 @@ import org.apache.spark.sql.SparkSession
   *     very last stdout line, so the driver's tail-parser always
   *     sees it (BENCH_r03 recorded parsed:null because shutdown
   *     logging could trail the metric line).
-  *   - A failed warm-up or query does not stop the run: every query
-  *     is still timed and every line printed. Then the process exits
-  *     1, naming the failures on stderr, as graft.Verify does.
+  *   - A failed warm-up, query, stream-latency or stream-state
+  *     measurement (a soak stream reporting `{"error":…}` included)
+  *     does not stop the run: every query is still timed and every
+  *     line printed. Then the process exits 1, naming the failures on
+  *     stderr, as graft.Verify does.
+  *
+  * One record file per run. Stdout carries the summary, per-query,
+  * map-or-pointer and stream lines;
+  * everything else lands in ONE JSON file at `SPARK_GRAFT_BENCH_OUT`
+  * (default BENCH_DETAIL.json): `heap`, `bench` (the full line:
+  * total, every per-query time, the stream latency and stream state
+  * objects, provenance) and `profile` (per-query input/shuffle/spill
+  * bytes plus suite totals). A targeted run writes the same record
+  * for its subset, so point `SPARK_GRAFT_BENCH_OUT` elsewhere to keep
+  * a committed full-suite record (the constrained-resource runs,
+  * BENCH_LOWMEM.json, round-9 verdict item 3, go there).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val recordPath = sys.env.get("SPARK_GRAFT_BENCH_OUT").filter(_.nonEmpty)
+      .getOrElse("BENCH_DETAIL.json")
+    val spark = GraftSession()
+    import GraftSession.{fmt, force, release}
 
-    val warmupFailed = scala.collection.mutable.ArrayBuffer[String]()
+    // each failure is named on stderr where it happens and listed again
+    // in the closing exit-1 message
+    val failures = scala.collection.mutable.ArrayBuffer[String]()
+    def failed(what: String, t: Throwable): Unit = {
+      System.err.println(s"[bench] $what failed: $t")
+      failures += what
+    }
     // warm-up: touch every table + run one small query end to end
     // (codegen, parquet footer reads, shuffle machinery), and
     // pre-materialize the generated fixtures — they stand in for the
@@ -63,54 +76,23 @@ object Bench {
       queries.TelecomOps.warmFixtures(spark, sfDir)
       queries.MultimodalOps.warmFixtures(spark, sfDir)
       queries.TextOps.warmFixtures(spark, sfDir)
-      SparkEntry.queries.get("q01_pricing_summary")
-        .foreach(fn => fn(spark, sfDir).write.format("noop")
-          .mode("overwrite").save())
+      SparkEntry.queries.get("q01_pricing_summary").foreach(fn => force(fn(spark, sfDir)))
     } catch {
-      // stderr keeps the stdout JSON line clean but makes a failed
-      // warm-up visible: the first fixture-dependent query would
-      // otherwise silently absorb materialization into its timer
-      case t: Throwable =>
-        System.err.println(s"[bench] warm-up failed: $t")
-        warmupFailed += "warm-up"
+      // a failed warm-up counts as a failure: the first fixture-dependent
+      // query would otherwise silently absorb materialization into its timer
+      case t: Throwable => failed("warm-up", t)
     }
 
-    // Force queries through the NOOP SINK, not count(): count() lets
-    // the optimizer prune every column the row count doesn't need —
-    // final aggregate expressions vanish, and Spark 4 eliminates a
-    // left join whose right side is a unique-keyed aggregate, so a
-    // "diagnostics left-joined onto the universe" query (q100/q209/
-    // q237 shape) collapsed to a bare scan count (measured in round
-    // 7: q237's entire surgery optimized away — 59 shuffle bytes).
-    // The noop write materializes every output column through the
-    // full physical plan and discards rows at the sink, which is the
-    // honest definition of "run the query".
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    // GraftSession.force runs each query through the noop sink (its
+    // scaladoc: count() let the optimizer prune whole joins), and
+    // release sweeps leaked blocks and collects them AFTER the timer
+    def timeOnce(fn: (SparkSession, String) => DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { force(fn(spark, sfDir)); true } catch {
         case t: Throwable => System.err.println(s"[bench] query failed: $t"); false
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // free leaked block-manager state AFTER the timer: persist-based
-      // operators (PrefixSum's sorted input, connectedComponents'
-      // localCheckpoints) cannot unpersist their own output's lineage,
-      // and across 115 queries x reps the pinned blocks inflate later
-      // timers through GC pressure. Queries are independent — in
-      // production each runs in its own session — so nothing here is
-      // needed again (the next rep rebuilds its plan from scratch).
-      try {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-      } catch { case t: Throwable => System.err.println(s"[bench] cache sweep failed: $t") }
-      // collect the just-unpersisted blocks NOW, outside any timer:
-      // without this, the heap pressure they leave behind is paid as
-      // GC pauses INSIDE a later query's timer — the measured
-      // mechanism behind the r5 "in-suite only" drift class (q151
-      // 3.5 s isolated vs 7.8 s in-suite on an identical plan)
-      System.gc()
+      release(spark)
       (elapsed, ok)
     }
     // min over reps: one clean rep measures the query even when a
@@ -130,11 +112,11 @@ object Bench {
     // listener accumulates off-thread and the drain happens after the
     // timer, so the timing protocol is unchanged.
     val profiler = TaskMetricsProfiler.install(spark)
-    val profiles = Seq.newBuilder[(String, TaskMetricsProfiler.Profile)]
+    val profiles = Seq.newBuilder[TaskMetricsProfiler.Profile]
     val results = selected.map { case (name, fn) =>
       profiler.reset()
       val first = timeOnce(fn)
-      profiles += name -> profiler.snapshot(spark)
+      profiles += profiler.snapshot(spark)
       val samples = first +: (2 to reps).map(_ => timeOnce(fn))
       name -> (if (samples.forall(_._2)) best(samples.map(_._1)) else -1.0)
     }
@@ -142,15 +124,15 @@ object Bench {
     // well under the driver's output-capture tail so it stays
     // parseable; any qNN prefix collision falls back to full names so
     // no timing can silently vanish behind a duplicate JSON key.
-    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val shortKeys = results.map(_._1.takeWhile(_ != '_'))
     val useShort = shortKeys.distinct.length == shortKeys.length
-    val qs = results.zip(shortKeys).map { case ((k, v), sk) =>
-      "\"" + (if (useShort) sk else k) + "\":" + fmt(v)
-    }.mkString("{", ",", "}")
+    val keys = if (useShort) shortKeys else results.map(_._1)
+    val qs = keys.zip(results).map { case (k, (_, v)) => s""""$k":${fmt(v)}""" }
+      .mkString("{", ",", "}")
     // failed queries (sentinel -1.0) stay out of the total
     val total = results.map(_._2).filter(_ >= 0).sum
-    val failed = results.count(_._2 < 0)
+    val failedQueries = results.collect { case (n, v) if v < 0 => n }
+    failures ++= failedQueries
     // Streaming latency rides along in the same artifact (round-5
     // verdict item 5): the fraud-detection path's p50/p95/max
     // micro-batch latency, measured on this same session AFTER the
@@ -164,26 +146,26 @@ object Bench {
     val streamLine: Option[String] =
       if (streamBatches > 0 && wanted.isEmpty)
         try Some(StreamBench.measure(spark, streamBatches, streamReps))
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] stream latency failed: $t"); None }
+        catch { case t: Throwable => failed("stream latency", t); None }
       else None
     // State-store boundedness evidence (round-6 verdict item 5): the
     // at-ingest dedup's state rows/bytes over >=100 micro-batches must
     // plateau under event-time expiry; the quarter-point series +
-    // plateau ratio land in the same artifact.
+    // plateau ratio land in the same artifact. A soak stream that
+    // threw reports {"error":…} in the line and counts as a failure.
     val stateBatches =
       sys.env.getOrElse("SPARK_GRAFT_STATE_BATCHES", "100").toInt
     val stateLine: Option[String] =
       if (stateBatches > 0 && wanted.isEmpty)
-        try Some(StreamBench.measureState(spark, stateBatches))
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] stream state failed: $t"); None }
+        try Some(StreamBench.measureState(spark, stateBatches,
+          name => failures += s"stream state $name"))
+        catch { case t: Throwable => failed("stream state", t); None }
       else None
     // Provenance (round-5 verdict item 4): timestamp + environment so
     // the committed artifact is self-evidencing about when/where it ran.
     val prov = {
       val utc = java.time.Instant.now().toString
-      s""""generated_utc":"$utc","spark":"${org.apache.spark.SPARK_VERSION}","cpus":$cpus,"java":"${System.getProperty("java.version")}""""
+      s""""generated_utc":"$utc","spark":"${org.apache.spark.SPARK_VERSION}","cpus":${spark.sparkContext.defaultParallelism},"java":"${System.getProperty("java.version")}""""
     }
     val streamField = streamLine.map(l => s""","stream_latency":$l""").getOrElse("") +
       stateLine.map(l => s""","stream_state":$l""").getOrElse("")
@@ -193,63 +175,28 @@ object Bench {
     // per-query map is ~4.5 KB — every BENCH_r0N.json through r9
     // truncated mid-map with parsed:null. So stdout carries the map
     // INLINE only while it fits the tail budget; otherwise a pointer
-    // to BENCH_DETAIL.json (which always holds the full map) takes
-    // its place, and the whole stdout record fits the capture window
+    // to the record file (which always holds the full map) takes its
+    // place, and the whole stdout record fits the capture window
     // intact (round-9 verdict item 7).
     val stdoutLine =
       if (qs.length <= 1200) line
-      else s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"nqueries":${results.length},"failed":$failed,"queries_file":"BENCH_DETAIL.json","sf":"$sfDir",$prov}"""
+      else s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"nqueries":${results.length},"failed":${failedQueries.size},"queries_file":"$recordPath","sf":"$sfDir",$prov}"""
     val summary =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"nqueries":${results.length},"failed":$failed,"sf":"$sfDir",$prov}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"nqueries":${results.length},"failed":${failedQueries.size},"sf":"$sfDir",$prov}"""
     // Physical profile object: per-query bytes moved + suite totals.
     // The totals line makes the zero-spill claim checkable at a glance.
-    val profJson: Option[String] = try {
-      val profs = profiles.result()
-      val pShort = profs.map(_._1.takeWhile(_ != '_'))
-      val pUseShort = pShort.distinct.length == pShort.length
-      val pQs = profs.zip(pShort).map { case ((k, p), sk) =>
-        "\"" + (if (pUseShort) sk else k) + "\":" + p.json
-      }.mkString("{", ",", "}")
-      val tot = TaskMetricsProfiler.Profile(
-        profs.map(_._2.inputBytes).sum, profs.map(_._2.shuffleReadBytes).sum,
-        profs.map(_._2.shuffleWriteBytes).sum, profs.map(_._2.diskSpillBytes).sum,
-        profs.map(_._2.memSpillBytes).sum, profs.map(_._2.tasks).sum)
-      Some(s"""{"sf":"$sfDir",$prov,"totals":${tot.json},"queries":$pQs}""")
-    } catch { case t: Throwable =>
-      System.err.println(s"[bench] profile build failed: $t"); None }
-    // SPARK_GRAFT_BENCH_OUT redirects the WHOLE record (timings +
-    // profile) to one named artifact — the constrained-resource runs
-    // (BENCH_LOWMEM.json, round-9 verdict item 3) go there so a
-    // targeted pass can never clobber the committed full-suite maps.
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").filter(_.nonEmpty) match {
-      case Some(path) =>
-        try java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(path),
-          s"""{"heap":"${Runtime.getRuntime.maxMemory() / (1024L * 1024)}m","bench":$line,"profile":${profJson.getOrElse("null")}}""" + "\n")
-        catch { case t: Throwable => System.err.println(s"[bench] out write failed: $t") }
-      case None =>
-        // Full per-query detail lands in a repo file (overwritten per
-        // run) so truncated stdout can never lose the per-query record;
-        // the profile map is full-suite-only (a dev-loop subset would
-        // clobber the committed full map).
-        try java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("BENCH_DETAIL.json"), line + "\n")
-        catch { case t: Throwable => System.err.println(s"[bench] detail write failed: $t") }
-        if (wanted.isEmpty) profJson.foreach { pj =>
-          try java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("BENCH_PROFILE.json"), pj + "\n")
-          catch { case t: Throwable => System.err.println(s"[bench] profile write failed: $t") }
-        }
-        // The slim driver-readable record also lands in its own file:
-        // stdout capture windows truncate, sbt used to prefix, but a
-        // committed one-line artifact always parses end-to-end
-        // (round-10 verdict item 4).
-        if (wanted.isEmpty) {
-          try java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("BENCH_SLIM.json"), summary + "\n")
-          catch { case t: Throwable => System.err.println(s"[bench] slim write failed: $t") }
-        }
+    val profs = profiles.result()
+    val profJson = {
+      val pQs = keys.zip(profs).map { case (k, p) => s""""$k":${p.json}""" }
+        .mkString("{", ",", "}")
+      val tot = profs.foldLeft(TaskMetricsProfiler.Profile.zero)(_ + _)
+      s"""{"sf":"$sfDir",$prov,"totals":${tot.json},"queries":$pQs}"""
     }
+    // The one record file (see scaladoc): overwritten per run, so a
+    // truncated stdout can never lose the per-query record.
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(recordPath),
+      s"""{"heap":"${Runtime.getRuntime.maxMemory() / (1024L * 1024)}m","bench":$line,"profile":$profJson}""" + "\n")
+    catch { case t: Throwable => failed(s"record write ($recordPath)", t) }
     // stop FIRST so no Spark shutdown logging can trail the metric
     // lines on stdout; the driver parses the last line it captures.
     try spark.stop() catch { case _: Throwable => () }
@@ -261,22 +208,21 @@ object Bench {
     if (wanted.isEmpty) println(summary)
     // Per-query seconds, one parseable JSON line each (round 13,
     // verdict item 2): the driver's PERF comparator reads stdout —
-    // BENCH_DETAIL.json is invisible to it, so per-query regressions
+    // the record file is invisible to it, so per-query regressions
     // went undetected for two rounds (PERF_r12 n_common: 0). Emitted
     // between the leading and trailing slim totals, ADDITIONS-ONLY:
     // every pre-existing line (and its position as first/last) is
     // unchanged, so first-line and tail parsers see what they always
     // saw, and a whole-capture parser now gets the full per-query map
     // even when a single inline map line would overflow the capture.
-    if (wanted.isEmpty) results.zip(shortKeys).foreach { case ((k, v), sk) =>
-      println(s"""{"metric":"query","name":"${if (useShort) sk else k}","sec":${fmt(v)}}""")
+    if (wanted.isEmpty) keys.zip(results).foreach { case (k, (_, v)) =>
+      println(s"""{"metric":"query","name":"$k","sec":${fmt(v)}}""")
     }
     println(stdoutLine)
     streamLine.foreach(println)
     stateLine.foreach(println)
     println(summary)
     System.out.flush()
-    val failures = warmupFailed ++ results.collect { case (n, v) if v < 0 => n }
     if (failures.nonEmpty) {
       System.err.println(s"[bench] ${failures.size} failed: ${failures.mkString(", ")}")
       sys.exit(1)

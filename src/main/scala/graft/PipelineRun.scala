@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 
 /** One auditable end-to-end pipeline run (round-5 verdict item 7):
   * executes the full medallion DAG — bronze generators → silver →
@@ -15,19 +14,13 @@ import org.apache.spark.sql.SparkSession
   * Usage: `sbt "runMain graft.PipelineRun [outDir]"` — outDir
   * defaults to target/pipeline_run; the manifest copy always lands at
   * ./PIPELINE_RUN.json. Exit code 1 on BLOCKED (the orchestrator
-  * contract: a blocked run must fail the job).
+  * contract: a blocked run must fail the job). The session is
+  * `GraftSession`'s, the one the pipeline specs run under.
   */
 object PipelineRun {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("target/pipeline_run")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val (manifest, status) = telecom.Pipeline.runAll(spark, outDir)
     Files.copy(Paths.get(outDir, "run_manifest.json"),

@@ -1,22 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Prints formatted physical plans for representative queries —
-  * the scale-review loop (pushdown, broadcast, codegen spans). */
+
+/** Plan-audit dev loop: prints the formatted physical plan of named
+  * registered queries without running them — the scale-review loop
+  * (pushdown, broadcast, codegen spans). Usage:
+  *   sbt "runMain graft.PlanAudit [query_name ...]"
+  * reads `SPARK_GRAFT_SF_DIR` (default: the sf0.01 test data); with no
+  * names it prints a few representative queries. The session is
+  * `GraftSession`'s, so the printed plan is the plan Verify and Bench
+  * execute.
+  */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = "/root/testdata/sf0.01"
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = GraftSession()
     val targets = if (args.nonEmpty) args.toSeq else Seq(
       "q02_filter_project", "q03_star_join", "q04_left_join_agg", "q49_cosine_topk")
     targets.foreach { name =>
+      val fn = SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query '$name' — keys: ${SparkEntry.queries.keys.toSeq.sorted.take(5).mkString(", ")}..."))
       println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, dir).explain("formatted")
+      fn(spark, dir).explain("formatted")
     }
     spark.stop()
   }

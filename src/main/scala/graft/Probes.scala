@@ -1,34 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Evidence-gathering harnesses behind the scale-sweep attributions
   * (round-9 verdict items 2 and 6). These are not queries — they
   * print the per-round / per-bucket numbers that turn a measured
   * growth exponent into an explained one, and PLANS.md cites their
-  * output. Both mirror ScaleSweep's session shape (local[cpus],
-  * shuffle.partitions = cpus) so the numbers live in the same regime
-  * as the sweep rows they explain.
+  * output. They run on the same `GraftSession` as ScaleSweep
+  * (local[cpus], shuffle.partitions = cpus) so the numbers live in
+  * the same regime as the sweep rows they explain.
   */
-object Probes {
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private[graft] def fmt(v: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, v)
-}
 
 /** Per-round timing of q250's prefix-doubling loop at each given
   * scale dir — separates the two candidate causes of the measured
@@ -40,8 +21,8 @@ object Probes {
 object SuffixRankProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("target/sf1", "target/sf10")
-    val spark = Probes.session()
-    import Probes.fmt
+    val spark = GraftSession()
+    import GraftSession.fmt
     dirs.foreach { dir =>
       val docs = Tables.documents(spark, dir)
       val t0 = System.nanoTime()
@@ -69,50 +50,29 @@ object SuffixRankProbe {
 
 /** Per-STAGE task-metrics audit for one query at one scale dir: the
   * suite profiler aggregates per QUERY, which locates a regression
-  * but not the operator — this prints one JSON line per completed
-  * stage (name, tasks, input/shuffle/spill bytes) so a deterministic
-  * spill can be pinned to the exchange/sort/aggregate that paid it
-  * (used to attribute q225's sf100 spill, round 9). */
+  * but not the operator — this prints the profiler's stage rows, one
+  * JSON line per stage (name, call site, tasks, input/shuffle/spill
+  * bytes), so a deterministic spill can be pinned to the
+  * exchange/sort/aggregate that paid it (used to attribute q225's
+  * sf100 spill, round 9). The closing line carries the run's totals,
+  * which the stage rows sum to. */
 object SpillAudit {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "target/sf100"
-    val spark = Probes.session()
-    import Probes.fmt
-    val sc = spark.sparkContext
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        if (m != null) {
-          val j = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
-          rows.add(s"""{"stage":${si.stageId},"name":${
-            j.writeValueAsString(si.name.take(160))},"tasks":${si.numTasks},""" +
-            s""""input":${m.inputMetrics.bytesRead},""" +
-            s""""shuffle_read":${m.shuffleReadMetrics.totalBytesRead},""" +
-            s""""shuffle_write":${m.shuffleWriteMetrics.bytesWritten},""" +
-            s""""mem_spill":${m.memoryBytesSpilled},"disk_spill":${m.diskBytesSpilled},""" +
-            s""""site":${j.writeValueAsString(
-              si.details.linesIterator.take(6).mkString(" | ").take(500))}}""")
-        }
-      }
-    })
+    val spark = GraftSession()
+    import GraftSession.fmt
+    val profiler = TaskMetricsProfiler.install(spark)
     val df = SparkEntry.queries(name)(spark, dir)
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
       System.err.println(df.queryExecution.executedPlan.toString)
     val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
+    GraftSession.force(df)
     val dt = (System.nanoTime() - t0) / 1e9
-    // stop() drains the async listener bus BEFORE the rows are read:
-    // onStageCompleted events are delivered off-thread, so printing
-    // right after the action returns can miss trailing stages and
-    // under-report spill (round-9 advice).
+    val p = profiler.snapshot(spark)
     try spark.stop() catch { case _: Throwable => () }
-    import scala.jdk.CollectionConverters._
-    rows.asScala.toSeq.foreach(println)
-    println(s"""{"query":"$name","dir":"$dir","secs":${fmt(dt)}}""")
+    p.stages.foreach(s => println(s.json))
+    println(s"""{"query":"$name","dir":"$dir","secs":${fmt(dt)},"totals":${p.json}}""")
   }
 }
 
@@ -133,8 +93,8 @@ object SpillAudit {
 object SrpOccupancyProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("target/sf1", "target/sf10")
-    val spark = Probes.session()
-    import Probes.fmt
+    val spark = GraftSession()
+    import GraftSession.fmt
     import graft.operators.Similarity
     val bands = 8
     val blockBits = 16
@@ -211,8 +171,8 @@ object Tier1NaturalProbe {
     val out = if (args.length > 1) args(1) else "target/sf1000e"
     val budget = 64
     val k = 5
-    val spark = Probes.session()
-    import Probes.fmt
+    val spark = GraftSession()
+    import GraftSession.fmt
 
     // embeddings-only 10x scale-up, marker-guarded like ScaleUp
     val marker = java.nio.file.Paths.get(s"$out/_EMB_DONE")
@@ -225,26 +185,8 @@ object Tier1NaturalProbe {
       Tables.invalidateStamps()
     }
 
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillD = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillM = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillD.addAndGet(m.diskBytesSpilled)
-          spillM.addAndGet(m.memoryBytesSpilled)
-        }
-      }
-    })
-    // async listener bus: give trailing stage events time to land
-    // before snapshotting a leg's counters (SpillAudit's caveat)
-    def snap(): (Long, Long, Long) = {
-      Thread.sleep(3000)
-      (shuffleW.get(), spillD.get(), spillM.get())
-    }
+    // each leg's bytes come from its own reset/snapshot window
+    val profiler = TaskMetricsProfiler.install(spark)
 
     val c = Tables.embeddings(spark, out)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
@@ -263,6 +205,7 @@ object Tier1NaturalProbe {
     qs.count()
 
     // exact ground truth: one broadcast scan + heap aggregate
+    profiler.reset()
     val t0 = System.nanoTime()
     val sp = spark
     val c2 = c.withColumn("_n2c", Similarity.dotFast(sp, col("query_vec"), col("query_vec")))
@@ -280,16 +223,17 @@ object Tier1NaturalProbe {
       .select(col("query_id"), col("vid").cast("long").as("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val gtSecs = (System.nanoTime() - t0) / 1e9
-    val (sw0, sd0, sm0) = snap()
+    val gtP = profiler.snapshot(spark)
 
     // the ANN leg: auto-derived bits, no forceBits
+    profiler.reset()
     val t1 = System.nanoTime()
     val ann = Similarity.annTopKAuto(c, qs, k = k, Similarity.planes(256, 64),
         knownN = n, knownQ = budget)
       .select(col("query_id"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val annSecs = (System.nanoTime() - t1) / 1e9
-    val (sw1, sd1, sm1) = snap()
+    val annP = profiler.snapshot(spark)
     qs.unpersist(blocking = false)
 
     val recall = (gt & ann).size.toDouble / math.max(1, gt.size)
@@ -298,11 +242,12 @@ object Tier1NaturalProbe {
       s""""occupancy":${fmt(n.toDouble / (1L << bits))},""" +
       s""""budget":$budget,"k":$k,""" +
       s""""gt_secs":${fmt(gtSecs)},"ann_secs":${fmt(annSecs)},""" +
-      s""""gt_shuffle":$sw0,"gt_spill_disk":$sd0,"gt_spill_mem":$sm0,""" +
-      s""""ann_shuffle":${sw1 - sw0},"ann_spill_disk":${sd1 - sd0},"ann_spill_mem":${sm1 - sm0},""" +
+      s""""gt_shuffle":${gtP.shuffleWriteBytes},"gt_spill_disk":${gtP.diskSpillBytes},""" +
+      s""""gt_spill_mem":${gtP.memSpillBytes},"ann_shuffle":${annP.shuffleWriteBytes},""" +
+      s""""ann_spill_disk":${annP.diskSpillBytes},"ann_spill_mem":${annP.memSpillBytes},""" +
       s""""gt_pairs":${gt.size},"ann_pairs":${ann.size},""" +
       s""""recall_at_$k":${fmt(recall)},"pass":${recall >= 0.9},""" +
-      s""""cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}"}""")
+      s""""cpus":${spark.sparkContext.defaultParallelism}}""")
     System.out.flush()
     try spark.stop() catch { case _: Throwable => () }
   }

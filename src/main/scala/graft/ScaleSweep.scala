@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Growth-exponent sweep over the heavy-tail queries (round-5
   * verdict item 3; round-6 item 4 added the second decade): time each
   * target query at sf0.1 (driver data), sf1 and sf10 (ScaleUp-derived
@@ -222,16 +220,8 @@ object ScaleSweep {
     // minutes-long points, for the ThirdDecadeTargets flat-claims only
     val runDecade3 = sys.env.getOrElse("SPARK_GRAFT_SF100", "0") == "1"
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    import GraftSession.{fmt, force, release}
 
     // key the skip on writeAll's completion marker, not table
     // existence: a crash mid-generation leaves a mixed-scale
@@ -271,32 +261,26 @@ object ScaleSweep {
     val profiler = TaskMetricsProfiler.install(spark)
     // noop-sink forcing, matching Bench: count() lets the optimizer
     // prune result expressions and even whole unique-keyed left
-    // joins (see Bench.force scaladoc — the round-7 q237 finding)
+    // joins (see GraftSession.force — the round-7 q237 finding)
     def sweep(dir: String, name: String): (Double, TaskMetricsProfiler.Profile) = {
       val fn = SparkEntry.queries(name)
       var profile: TaskMetricsProfiler.Profile = null
       val samples = (1 to reps).map { r =>
         if (r == 1) profiler.reset()
         val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        force(fn(spark, dir))
         val dt = (System.nanoTime() - t0) / 1e9
         if (r == 1) profile = profiler.snapshot(spark)
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-        } catch { case _: Throwable => () }
+        release(spark)
         dt
       }
       (samples.min, profile)
     }
 
     // warm-up (codegen + parquet footers) outside the timers
-    try targets.headOption.foreach(n => SparkEntry.queries(n)(spark, sf01)
-      .write.format("noop").mode("overwrite").save())
+    try targets.headOption.foreach(n => force(SparkEntry.queries(n)(spark, sf01)))
     catch { case t: Throwable => System.err.println(s"[sweep] warm-up failed: $t") }
 
-    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def decade(label: String, lo: String, hi: String,
                names: Seq[String]): String = {
       val rows = names.map { name =>
@@ -342,7 +326,7 @@ object ScaleSweep {
       .mkString("[", ",", "]")
     val utc = java.time.Instant.now().toString
     val out =
-      s"""{"reps":$reps,"cpus":$cpus,"generated_utc":"$utc","decade2_excluded":$excluded,"decade3_excluded":$excluded3,"not_swept":$notSwept,"sweeps":[${((d1 +: d2) ++ d3).mkString(",")}]}"""
+      s"""{"reps":$reps,"cpus":${spark.sparkContext.defaultParallelism},"generated_utc":"$utc","decade2_excluded":$excluded,"decade3_excluded":$excluded3,"not_swept":$notSwept,"sweeps":[${((d1 +: d2) ++ d3).mkString(",")}]}"""
     // Runs MERGE into the artifact by (decade, query): a targeted run
     // (query args — the fix-one-query dev loop) never clobbers the
     // other rows of evidence, and a full run keeps decades it did not
@@ -354,8 +338,17 @@ object ScaleSweep {
     val merged =
       if (overwrite) out
       else try mergeArtifact(java.nio.file.Paths.get("SCALESWEEP.json"), out)
-      catch { case t: Throwable =>
-        System.err.println(s"[sweep] merge failed, writing this run alone: $t"); out }
+      catch {
+        case e: CoresMismatch =>
+          // the artifact's one "cpus" labels every row: keep it as it
+          // was rather than mix in rows timed on another core count
+          System.err.println(s"[sweep] ${e.getMessage}; SCALESWEEP.json left unchanged")
+          try spark.stop() catch { case _: Throwable => () }
+          println(out)
+          sys.exit(1)
+        case t: Throwable =>
+          System.err.println(s"[sweep] merge failed, writing this run alone: $t"); out
+      }
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("SCALESWEEP.json"), merged + "\n")
     catch { case t: Throwable => System.err.println(s"[sweep] write failed: $t") }
@@ -366,8 +359,10 @@ object ScaleSweep {
   /** Merge `runJson` (this run) into the artifact at `path`: rows
     * replace same-(decade, query) rows, new queries append, untouched
     * decades/rows survive; reps/cpus/timestamp come from this run.
-    * Jackson (Spark's bundled JSON stack) both parses and re-emits,
-    * so the merged file is valid by construction. */
+    * A run on a different core count than the artifact's throws
+    * `CoresMismatch`: the top-level "cpus" would mislabel the rows
+    * that survive. Jackson (Spark's bundled JSON stack) both parses
+    * and re-emits, so the merged file is valid by construction. */
   private[graft] def mergeArtifact(path: java.nio.file.Path, runJson: String): String = {
     import com.fasterxml.jackson.databind.ObjectMapper
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -376,6 +371,9 @@ object ScaleSweep {
     val run = mapper.readTree(runJson).asInstanceOf[ObjectNode]
     if (!java.nio.file.Files.exists(path)) return runJson
     val base = mapper.readTree(java.nio.file.Files.readString(path)).asInstanceOf[ObjectNode]
+    for (b <- Option(base.get("cpus")); r <- Option(run.get("cpus")) if b.asText != r.asText)
+      throw new CoresMismatch(s"this run used ${r.asText} cores, the artifact's rows ${b.asText}: " +
+        s"rerun with SPARK_GRAFT_CPUS=${b.asText}, or SPARK_GRAFT_SWEEP_OVERWRITE=1 to start afresh")
     val baseSweeps = base.withArray[ArrayNode]("sweeps")
     run.withArray[ArrayNode]("sweeps").elements().asScala.foreach { runDec =>
       val label = runDec.get("decade").asText()
@@ -396,4 +394,7 @@ object ScaleSweep {
       .foreach(f => base.set[ObjectNode](f, run.get(f)))
     mapper.writeValueAsString(base)
   }
+
+  /** A run whose core count differs from the artifact's (`mergeArtifact`). */
+  final class CoresMismatch(msg: String) extends RuntimeException(msg)
 }

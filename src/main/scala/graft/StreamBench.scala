@@ -1,8 +1,9 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.FraudDetection
 import graft.streaming.FraudDetection.CallPing
 
@@ -53,7 +54,6 @@ object StreamBench {
       .writeStream.format("memory").queryName("latency_alerts")
       .outputMode("append").start()
 
-    val t0 = 1704067200000L
     def batch(b: Int): Seq[CallPing] =
       (0 until custs).flatMap { c =>
         (0 until eventsPerCustPerBatch).map { i =>
@@ -61,7 +61,7 @@ object StreamBench {
           // drift coordinates so some pairs trip the travel rule and
           // the per-customer recent-call list stays populated
           CallPing(s"C$c", f"e$b%04d$c%03d$i%d",
-            new Timestamp(t0 + (b * 60L + i * 10L) * 1000),
+            new Timestamp(T0 + (b * 60L + i * 10L) * 1000),
             lat = (c * 7 + seq * 3) % 170 - 85.0,
             lon = (c * 13 + seq * 11) % 350 - 175.0,
             tower_id = s"T${c % 10}")
@@ -96,6 +96,26 @@ object StreamBench {
         s""""events_per_sec":${fmt(throughput)},"alerts":$alerts}""")
   }
 
+  /** Event-time origin of every synthetic stream here (2024-01-01 UTC). */
+  private val T0 = 1704067200000L
+
+  /** Event time of row `i` in soak batch `b`: batches advance event
+    * time 30 s, rows spread over the batch's first 10 s. */
+  private def soakTs(b: Int, i: Int) = new Timestamp(T0 + b * 30000L + (i % 10) * 1000L)
+
+  /** The soak loop every `*StateSeries` shares: start `stream` into
+    * a noop append sink, then per batch feed it, run the batch to
+    * completion and read the state footprint. Stop in finally: a
+    * mid-soak failure must not leave the query running (holding
+    * state-store memory and threads) for the rest of the bench —
+    * measureState catches and carries on. */
+  private def soak(batches: Int, stream: Dataset[_])(
+      feed: Int => Unit): Seq[(Long, Long)] = {
+    val q = stream.writeStream.format("noop").outputMode("append").start()
+    try (0 until batches).map { b => feed(b); q.processAllAvailable(); stateOf(q) }
+    finally q.stop()
+  }
+
   /** Per-micro-batch state-store footprint of the at-ingest MinHash
     * dedup (StreamingDedup) under event-time expiry: each batch
     * advances event time 30 s and lands `docsPerBatch` documents in
@@ -103,8 +123,9 @@ object StreamBench {
     * rows would grow linearly with the batch count; with it, only
     * buckets active inside the trailing `idleTimeout` survive and the
     * series plateaus. Returns (stateRows, stateBytes) after each
-    * batch — the artifact evidence (round-6 verdict item 5) that
-    * keyed state is bounded by the idle window, not stream lifetime. */
+    * batch (the stream's one state operator, flatMapGroupsWithState)
+    * — the artifact evidence (round-6 verdict item 5) that keyed
+    * state is bounded by the idle window, not stream lifetime. */
   def stateSeries(spark: SparkSession, batches: Int,
                   docsPerBatch: Int = 40,
                   idleTimeout: String = "2 minutes"): Seq[(Long, Long)] = {
@@ -112,35 +133,19 @@ object StreamBench {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingDedup
     val mem = MemoryStream[StreamingDedup.DocEvent]
-    val q = StreamingDedup.detectStream(mem.toDS(),
-        watermarkDelay = "10 seconds", idleTimeout = idleTimeout)
-      .writeStream.format("memory").queryName("state_bench")
-      .outputMode("append").start()
-    val t0 = 1704067200000L
-    def batch(b: Int): Seq[StreamingDedup.DocEvent] =
-      (0 until docsPerBatch).map { i =>
+    val stream = StreamingDedup.detectStream(mem.toDS(),
+      watermarkDelay = "10 seconds", idleTimeout = idleTimeout)
+    soak(batches, stream) { b =>
+      mem.addData((0 until docsPerBatch).map { i =>
         // per-(batch, i/2) vocabulary → fresh buckets every batch;
         // odd docs near-dup their even sibling so candidates flow
         // through the state path (an empty-state stream would be a
         // vacuous plateau)
         val base = (s"token${b}x${i / 2} alpha beta gamma delta " * 4).trim
         val text = if (i % 2 == 0) base else base + " tail"
-        StreamingDedup.DocEvent(b.toLong * docsPerBatch + i, text,
-          new Timestamp(t0 + b * 30000L + (i % 10) * 1000L))
-      }
-    val series =
-      try (0 until batches).map { b =>
-        mem.addData(batch(b))
-        q.processAllAvailable()
-        val p = q.lastProgress
-        if (p != null && p.stateOperators.nonEmpty) {
-          val so = p.stateOperators(0)
-          (so.numRowsTotal, so.memoryUsedBytes)
-        } else (0L, 0L)
-      } finally q.stop()
-    try spark.catalog.dropTempView("state_bench")
-    catch { case _: Throwable => () }
-    series
+        StreamingDedup.DocEvent(b.toLong * docsPerBatch + i, text, soakTs(b, i))
+      })
+    }
   }
 
   /** Per-micro-batch state footprint of the streaming QUOTA ADMISSION
@@ -161,19 +166,12 @@ object StreamBench {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val mem = MemoryStream[AdmissionEvent]
-      val q = QuotaAdmission.admitStream(mem.toDS(), limit = 100)
-        .writeStream.format("noop").outputMode("append").start()
-      // stop in finally: a mid-soak failure must not leave the query
-      // running (holding state-store memory and threads) for the rest
-      // of the bench — measureState catches and carries on
-      try (0 until batches).map { b =>
+      soak(batches, QuotaAdmission.admitStream(mem.toDS(), limit = 100)) { b =>
         mem.addData((0 until sources).flatMap { s =>
           (0 until 4).map(i =>
             AdmissionEvent(s"src$s", b * 1000L + s * 4 + i, b * 4L + i))
         })
-        q.processAllAvailable()
-        stateOf(q)
-      } finally q.stop()
+      }
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -190,18 +188,12 @@ object StreamBench {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String)]
-    val q = graft.streaming.TopKStream.sketchWindows(
+    soak(batches, graft.streaming.TopKStream.sketchWindows(
         mem.toDF().toDF("ts", "key"),
         capacity = 64, windowDuration = "1 minute",
-        watermarkDelay = "10 seconds")
-      .writeStream.format("noop").outputMode("append").start()
-    val t0 = 1704067200000L
-    try (0 until batches).map { b =>
-      mem.addData((0 until 40).map(i =>
-        (new Timestamp(t0 + b * 30000L + (i % 10) * 1000L), s"k${b}x${i % 8}")))
-      q.processAllAvailable()
-      stateOf(q)
-    } finally q.stop()
+        watermarkDelay = "10 seconds")) { b =>
+      mem.addData((0 until 40).map(i => (soakTs(b, i), s"k${b}x${i % 8}")))
+    }
   }
 
   /** Per-micro-batch state footprint of the stream-stream interval
@@ -216,21 +208,16 @@ object StreamBench {
     implicit val sqlCtx = spark.sqlContext
     val cMem = MemoryStream[(String, String, Timestamp)]
     val pMem = MemoryStream[(String, Timestamp, Double)]
-    val q = graft.streaming.StreamEnrich.callsWithTowerLoad(
+    soak(batches, graft.streaming.StreamEnrich.callsWithTowerLoad(
         cMem.toDF().toDF("event_id", "tower_id", "call_ts"),
         pMem.toDF().toDF("tower_id", "probe_ts", "load_pct"),
-        tolerance = "2 minutes", lateness = "10 seconds")
-      .writeStream.format("noop").outputMode("append").start()
-    val t0 = 1704067200000L
-    try (0 until batches).map { b =>
-      val t = t0 + b * 30000L
+        tolerance = "2 minutes", lateness = "10 seconds")) { b =>
+      val t = T0 + b * 30000L
       cMem.addData((0 until 10).map(c =>
         (s"e$b-$c", s"T${c % 5}", new Timestamp(t + c * 1000L))))
       pMem.addData((0 until 10).map(p =>
         (s"T${p % 5}", new Timestamp(t + p * 1500L), (p * 7 % 100).toDouble)))
-      q.processAllAvailable()
-      stateOf(q)
-    } finally q.stop()
+    }
   }
 
   /** Per-micro-batch state footprint of the streaming HLL
@@ -245,17 +232,11 @@ object StreamBench {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String)]
-    val q = graft.streaming.CardinalityStream.registerWindows(
+    soak(batches, graft.streaming.CardinalityStream.registerWindows(
         mem.toDF().toDF("ts", "key"),
-        windowDuration = "1 minute", watermarkDelay = "10 seconds")
-      .writeStream.format("noop").outputMode("append").start()
-    val t0 = 1704067200000L
-    try (0 until batches).map { b =>
-      mem.addData((0 until 40).map(i =>
-        (new Timestamp(t0 + b * 30000L + (i % 10) * 1000L), s"k${b}x$i")))
-      q.processAllAvailable()
-      stateOf(q)
-    } finally q.stop()
+        windowDuration = "1 minute", watermarkDelay = "10 seconds")) { b =>
+      mem.addData((0 until 40).map(i => (soakTs(b, i), s"k${b}x$i")))
+    }
   }
 
   /** Per-micro-batch state footprint of the streaming HDR quantile
@@ -268,18 +249,11 @@ object StreamBench {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, Long)]
-    val q = graft.streaming.HdrQuantileStream.bucketWindows(
+    soak(batches, graft.streaming.HdrQuantileStream.bucketWindows(
         mem.toDF().toDF("ts", "v"),
-        b = 5, windowDuration = "1 minute", watermarkDelay = "10 seconds")
-      .writeStream.format("noop").outputMode("append").start()
-    val t0 = 1704067200000L
-    try (0 until batches).map { b =>
-      mem.addData((0 until 40).map(i =>
-        (new Timestamp(t0 + b * 30000L + (i % 10) * 1000L),
-          (i.toLong * 997 + b) % 100000L)))
-      q.processAllAvailable()
-      stateOf(q)
-    } finally q.stop()
+        b = 5, windowDuration = "1 minute", watermarkDelay = "10 seconds")) { b =>
+      mem.addData((0 until 40).map(i => (soakTs(b, i), (i.toLong * 997 + b) % 100000L)))
+    }
   }
 
   /** Per-micro-batch state footprint of the streaming quality gate's
@@ -295,12 +269,9 @@ object StreamBench {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, String, String)]
-    val q = graft.streaming.QualityGateStream.ruleCounts(
+    soak(batches, graft.streaming.QualityGateStream.ruleCounts(
         mem.toDF().toDF("event_ts", "doc_id", "lang", "text"),
-        windowDuration = "1 minute", watermarkDelay = "10 seconds")
-      .writeStream.format("noop").outputMode("append").start()
-    val t0 = 1704067200000L
-    try (0 until batches).map { b =>
+        windowDuration = "1 minute", watermarkDelay = "10 seconds")) { b =>
       mem.addData((0 until 40).map { i =>
         // mix of passers and multi-rule failers: healthy prose, a
         // too-short doc, a repetition-heavy doc, a symbol-soup doc
@@ -310,12 +281,9 @@ object StreamBench {
           case 2 => ("spam " * 40).trim
           case _ => "@@@ ### $$$ %%% ^^^ &&& *** ((( ))) @@@ ### $$$ %%% ^^^"
         }
-        (new Timestamp(t0 + b * 30000L + (i % 10) * 1000L),
-          s"d${b}x$i", "en", text)
+        (soakTs(b, i), s"d${b}x$i", "en", text)
       })
-      q.processAllAvailable()
-      stateOf(q)
-    } finally q.stop()
+    }
   }
 
   /** Per-micro-batch state footprint of the streaming PII scrub's
@@ -328,28 +296,23 @@ object StreamBench {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, String)]
-    val q = graft.streaming.PiiScrubStream.piiCounts(
+    soak(batches, graft.streaming.PiiScrubStream.piiCounts(
         mem.toDF().toDF("event_ts", "doc_id", "text"),
-        windowDuration = "1 minute", watermarkDelay = "10 seconds")
-      .writeStream.format("noop").outputMode("append").start()
-    val t0 = 1704067200000L
-    try (0 until batches).map { b =>
+        windowDuration = "1 minute", watermarkDelay = "10 seconds")) { b =>
       mem.addData((0 until 40).map { i =>
         val text = (i % 3) match {
           case 0 => s"contact user$b$i at person$b$i@example.com or 555-010$i"
           case 1 => s"server $b.$i.0.1 handled the request from 10.0.$i.$b cleanly"
           case _ => s"no sensitive content in this line at all batch $b row $i"
         }
-        (new Timestamp(t0 + b * 30000L + (i % 10) * 1000L), s"p${b}x$i", text)
+        (soakTs(b, i), s"p${b}x$i", text)
       })
-      q.processAllAvailable()
-      stateOf(q)
-    } finally q.stop()
+    }
   }
 
   /** Total state (rows, bytes) across all stateful operators of the
     * query's last progress. */
-  private def stateOf(q: org.apache.spark.sql.streaming.StreamingQuery): (Long, Long) = {
+  private def stateOf(q: StreamingQuery): (Long, Long) = {
     val p = q.lastProgress
     if (p == null || p.stateOperators.isEmpty) (0L, 0L)
     else (p.stateOperators.map(_.numRowsTotal).sum,
@@ -370,7 +333,7 @@ object StreamBench {
     val q4Max = rows.slice(3 * rows.size / 4, rows.size).maxOption
       .getOrElse(rows.max)
     val ratio = q4Max.toDouble / math.max(1L, q2Max)
-    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    import GraftSession.fmt
     s"""{"batches":$batches,""" +
       s""""rows_q1":${at(0.25)},"rows_q2":${at(0.5)},"rows_q3":${at(0.75)},""" +
       s""""rows_final":${rows.last},"rows_max":${rows.max},""" +
@@ -386,8 +349,10 @@ object StreamBench {
     * (state = tolerance-horizon buffers), windowed HLL cardinality
     * (state = windows × 64 registers), and windowed HDR quantiles
     * (state = windows × occupied buckets). A stream whose soak throws
-    * reports an "error" field instead of silently vanishing. */
-  def measureState(spark: SparkSession, batches: Int): String = {
+    * reports an "error" field instead of silently vanishing, and its
+    * name is passed to `failed` (Bench counts it as a failure). */
+  def measureState(spark: SparkSession, batches: Int,
+                   failed: String => Unit = _ => ()): String = {
     val dedup = plateauJson(stateSeries(spark, batches), batches)
     val others = Seq(
       "quota" -> (() => quotaStateSeries(spark, batches)),
@@ -401,6 +366,8 @@ object StreamBench {
       val body =
         try plateauJson(run(), batches)
         catch { case t: Throwable =>
+          System.err.println(s"[stream] $name soak failed: $t")
+          failed(name)
           s"""{"error":"${t.getClass.getSimpleName}"}"""
         }
       s""""$name":$body"""
@@ -410,20 +377,9 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "60").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the top-k soak's sketch aggregate is a graft extension; the
-      // bare session made its soak row an AnalysisException here
-      // while the same code passed under Bench's extended session
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val line = measure(spark, batches, reps)
     // standalone state-soak runner (SPARK_GRAFT_STATE_BATCHES=N):
     // the same artifact Bench embeds, without the 278-query suite

@@ -1,78 +1,106 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Physical resource profile of a query run, summed over every task
-  * between `reset()` and `snapshot()`.
+  * between `reset()` and `snapshot()`, with one row per stage.
   *
   * Wall time is a noisy scale signal (host drift, GC, neighbors —
   * the whole Bench scaladoc); BYTES are deterministic: the same plan
   * over the same data reads and shuffles the same bytes every run.
-  * So the profiler serves two jobs the timers can't:
+  * So the profiler serves jobs the timers can't:
   *   - ScaleSweep emits shuffle-bytes growth exponents alongside the
   *     time exponents — a noise-free check that a plan's data
   *     movement (not just its wall clock) grows sublinearly. A query
   *     whose time exponent looks fine on a quiet host but whose
   *     shuffle bytes grow at e=2 is a scale bug the time sweep can
   *     miss; the reverse (time drifts, bytes flat) is host noise.
-  *   - Bench writes BENCH_PROFILE.json: per-query input/shuffle/spill
-  *     bytes at sf0.1, the measured companion to PlanHygieneSpec's
-  *     structural allowlist. Spill evidence is the point at 100 TB:
-  *     a query spilling at sf0.1 under 32 local cores is guaranteed
-  *     to spill on real executors; zero-spill across the suite is the
-  *     claim worth committing.
+  *   - Bench's record carries per-query input/shuffle/spill bytes, the
+  *     measured companion to PlanHygieneSpec's structural allowlist.
+  *     Spill evidence is the point at 100 TB: a query spilling at
+  *     sf0.1 under 32 local cores is guaranteed to spill on real
+  *     executors; zero-spill across the suite is the claim worth
+  *     committing.
+  *   - The stage rows locate what the per-query totals cannot: which
+  *     exchange, sort or aggregate paid a spill (SpillAudit prints
+  *     them; round 9 attributed q225's sf100 spill this way).
+  *
+  * Each row is summed from the task-end events of its stage, so the
+  * rows add up to the totals exactly; the stage's name and call site
+  * arrive with its completion event.
   */
 final class TaskMetricsProfiler extends SparkListener {
-  private val input = new LongAdder
-  private val shuffleRead = new LongAdder
-  private val shuffleWrite = new LongAdder
-  private val diskSpill = new LongAdder
-  private val memSpill = new LongAdder
-  private val tasks = new LongAdder
+  import TaskMetricsProfiler.{Profile, Stage}
+
+  private val stages = new ConcurrentHashMap[Int, Stage]()
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
     if (m != null) {
-      input.add(m.inputMetrics.bytesRead)
-      shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
-      shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-      diskSpill.add(m.diskBytesSpilled)
-      memSpill.add(m.memoryBytesSpilled)
-      tasks.increment()
+      val task = Stage(e.stageId, "", "", Profile.ofTask(m))
+      stages.merge(e.stageId, task, (a, b) => a.copy(metrics = a.metrics + b.metrics))
     }
   }
 
-  def reset(): Unit = {
-    input.reset(); shuffleRead.reset(); shuffleWrite.reset()
-    diskSpill.reset(); memSpill.reset(); tasks.reset()
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val si = e.stageInfo
+    stages.computeIfPresent(si.stageId, (_, s) => s.copy(
+      name = si.name.take(160),
+      site = si.details.linesIterator.take(6).mkString(" | ").take(500)))
   }
+
+  def reset(): Unit = stages.clear()
 
   /** Drain the async listener bus, then read the counters. Call with
     * the action already complete; safe outside any timer. */
-  def snapshot(spark: SparkSession): TaskMetricsProfiler.Profile = {
+  def snapshot(spark: SparkSession): Profile = {
     GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    TaskMetricsProfiler.Profile(
-      inputBytes = input.sum(),
-      shuffleReadBytes = shuffleRead.sum(),
-      shuffleWriteBytes = shuffleWrite.sum(),
-      diskSpillBytes = diskSpill.sum(),
-      memSpillBytes = memSpill.sum(),
-      tasks = tasks.sum())
+    val rows = stages.values.asScala.toSeq.sortBy(_.id)
+    rows.map(_.metrics).foldLeft(Profile.zero)(_ + _).copy(stages = rows)
   }
 }
 
 object TaskMetricsProfiler {
+  /** Bytes moved and spilled by a set of tasks. `stages` is filled on
+    * a snapshot's totals only; `+` adds the totals and keeps no rows. */
   final case class Profile(inputBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, diskSpillBytes: Long, memSpillBytes: Long,
-      tasks: Long) {
+      tasks: Long, stages: Seq[Stage] = Nil) {
+    def +(o: Profile): Profile = Profile(
+      inputBytes + o.inputBytes, shuffleReadBytes + o.shuffleReadBytes,
+      shuffleWriteBytes + o.shuffleWriteBytes, diskSpillBytes + o.diskSpillBytes,
+      memSpillBytes + o.memSpillBytes, tasks + o.tasks)
+
     def json: String =
       s"""{"input":$inputBytes,"shuffle_read":$shuffleReadBytes,""" +
         s""""shuffle_write":$shuffleWriteBytes,"disk_spill":$diskSpillBytes,""" +
         s""""mem_spill":$memSpillBytes,"tasks":$tasks}"""
+  }
+
+  object Profile {
+    val zero: Profile = Profile(0L, 0L, 0L, 0L, 0L, 0L)
+
+    def ofTask(m: TaskMetrics): Profile = Profile(
+      m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
+      m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled,
+      m.memoryBytesSpilled, tasks = 1L)
+  }
+
+  /** One stage's row: id, name, call site and the metrics of its tasks. */
+  final case class Stage(id: Int, name: String, site: String, metrics: Profile) {
+    def json: String = {
+      val j = new com.fasterxml.jackson.databind.ObjectMapper()
+      s"""{"stage":$id,"name":${j.writeValueAsString(name)},""" +
+        metrics.json.stripPrefix("{").stripSuffix("}") +
+        s""","site":${j.writeValueAsString(site)}}"""
+    }
   }
 
   /** Register a profiler on the session (once per session). */

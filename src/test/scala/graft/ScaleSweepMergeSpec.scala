@@ -62,4 +62,17 @@ class ScaleSweepMergeSpec extends AnyFunSuite {
     assert(m.get("not_swept").get(0).get("query").asText === "qy")
     assert(m.get("decade2_excluded").get(0).get("query").asText === "qx")
   }
+
+  test("a run on another core count is refused, not merged under the artifact's label") {
+    val dir = java.nio.file.Files.createTempDirectory("sweepmerge3")
+    val path = dir.resolve("SCALESWEEP.json")
+    val base = """{"reps":2,"cpus":8,"generated_utc":"old",
+      |"sweeps":[{"decade":"sf0.1->sf1","rows":[{"query":"q1","exponent":0.3}]}]}""".stripMargin
+    java.nio.file.Files.writeString(path, base)
+    val run = """{"reps":2,"cpus":4,"generated_utc":"new",
+      |"sweeps":[{"decade":"sf0.1->sf1","rows":[{"query":"q2","exponent":0.4}]}]}""".stripMargin
+    val e = intercept[ScaleSweep.CoresMismatch](ScaleSweep.mergeArtifact(path, run))
+    assert(e.getMessage.contains("SPARK_GRAFT_CPUS=8"))
+    assert(java.nio.file.Files.readString(path) === base)
+  }
 }

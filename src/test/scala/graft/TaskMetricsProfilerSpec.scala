@@ -42,4 +42,34 @@ class TaskMetricsProfilerSpec extends SparkSpec {
     val s3 = p.snapshot(spark)
     assert(s3.shuffleWriteBytes === s1.shuffleWriteBytes)
   }
+
+  test("stage rows sum to the snapshot's totals; reset clears them") {
+    val p = TaskMetricsProfiler.install(spark)
+    p.reset()
+    Tables.documents(spark, sfDir)
+      .groupBy(col("lang")).agg(count(lit(1))).count()
+    val s = p.snapshot(spark)
+    // the scan + partial aggregate and the final aggregate run in
+    // separate stages, joined by the exchange whose bytes they share
+    assert(s.stages.size >= 2, s"stage rows missing: ${s.stages}")
+    // each row against an independent source: Spark's own status
+    // store counts the stage's tasks, and every shuffle byte written
+    // in the window is read in it — a row that dropped or
+    // double-counted tasks would miss either
+    val tracker = spark.sparkContext.statusTracker
+    s.stages.foreach { r =>
+      assert(tracker.getStageInfo(r.id).map(_.numTasks.toLong) === Some(r.metrics.tasks),
+        s"stage ${r.id} task count: ${r.json}")
+    }
+    assert(s.stages.map(_.metrics.shuffleWriteBytes).sum ===
+      s.stages.map(_.metrics.shuffleReadBytes).sum)
+    assert(s.tasks === s.stages.map(_.metrics.tasks).sum)
+    assert(s.stages.exists(_.metrics.shuffleWriteBytes > 0))
+    assert(s.stages.exists(_.metrics.shuffleReadBytes > 0))
+    assert(s.stages.forall(r => r.name.nonEmpty && r.site.nonEmpty),
+      s"stage name or call site missing: ${s.stages.map(_.json)}")
+
+    p.reset()
+    assert(p.snapshot(spark).stages.isEmpty)
+  }
 }
