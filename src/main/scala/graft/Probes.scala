@@ -207,13 +207,12 @@ object Tier1NaturalProbe {
     // exact ground truth: one broadcast scan + heap aggregate
     profiler.reset()
     val t0 = System.nanoTime()
-    val sp = spark
-    val c2 = c.withColumn("_n2c", Similarity.dotFast(sp, col("query_vec"), col("query_vec")))
-    val q2 = qs.withColumn("_n2q", Similarity.dotFast(sp, col("qvec"), col("qvec")))
+    val c2 = c.withColumn("_n2c", Similarity.dotFast(col("query_vec"), col("query_vec")))
+    val q2 = qs.withColumn("_n2q", Similarity.dotFast(col("qvec"), col("qvec")))
     val gt = c2.crossJoin(broadcast(q2))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("cosine",
-        (Similarity.dotFast(sp, col("query_vec"), col("qvec")).cast("double") /
+        (Similarity.dotFast(col("query_vec"), col("qvec")).cast("double") /
           sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
       .groupBy("query_id")
       .agg(call_function("graft_topk",

@@ -223,7 +223,7 @@ object Tables {
     * multi-file/100 TB table), this is the IDENTITY — no exchange is
     * added and the scan's own parallelism stands. Only when the scan
     * is provably under-parallel (naturalSplits < cores) does it
-    * append a round-robin repartition sized rows/rowsPerTask, capped
+    * append a round-robin repartition sized rows/rowsPerTask(name), capped
     * at the core count. Round-robin keeps `sortBeforeRepartition`
     * determinism (SPARK-23207) and, feeding only order-independent
     * consumers (aggregates, joins, explicit-key windows), cannot
@@ -234,8 +234,7 @@ object Tables {
     * scan (the repartition sits above the scan, so a filter above it
     * no longer prunes parquet row groups — irrelevant for the
     * full-scan analytics that use this, by construction). */
-  def fanOut(df: DataFrame, s: SparkSession, dir: String, name: String,
-             rowsPerTask: Long = 25000L): DataFrame = {
+  def fanOut(df: DataFrame, s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val bytes = fileBytesOf(s, path)
     // INTENTIONAL conservatism vs FilePartition.maxSplitBytes (ADVICE
@@ -257,11 +256,28 @@ object Tables {
     if (naturalSplits >= cores) df
     else {
       val rows = rowCount(s, dir, name)
-      val want = math.max(1L, (rows + rowsPerTask - 1L) / rowsPerTask)
+      val per = rowsPerTask(name)
+      val want = math.max(1L, (rows + per - 1L) / per)
       val n = math.min(cores, want)
       if (n <= naturalSplits) df else df.repartition(n.toInt)
     }
   }
+
+  /** Rows per fanned-out task, one value per table: few where the
+    * per-row work is heavy (documents' text kernels, embeddings'
+    * 64-d vector math, events' decimal casts), 25000 elsewhere. */
+  private def rowsPerTask(name: String): Long = name match {
+    case "documents" => 250L
+    case "embeddings" => 100L
+    case "events" => 4000L
+    case _ => 25000L
+  }
+
+  /** The documents table fanned out for per-doc text kernels
+    * (tokenize, n-gram HOFs, hashes), which otherwise run in a
+    * single-split scan's one task at any core count. */
+  def fannedDocs(s: SparkSession, dir: String): DataFrame =
+    fanOut(documents(s, dir), s, dir, "documents")
 
   /** Total file bytes under `path`, memoized per (path, tick) on the
     * same epoch discipline as [[fileStamp]] (at most one listing per

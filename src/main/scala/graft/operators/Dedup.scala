@@ -243,20 +243,16 @@ object Dedup {
 
   /** Exact Jaccard verification of candidate pairs against the
     * distinct shingle-hash sets (declarative: two joins + one
-    * array_intersect per pair, Catalyst plans the shuffles). */
+    * intersection count per pair, Catalyst plans the shuffles). */
   def verifyJaccard(pairs: DataFrame, df: DataFrame, idCol: String,
                     textCol: String, shingleN: Int = 3): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, shingleN)
       .select(col(idCol).as("_vid"), col("_shingles").as("_set"))
     // shingle arrays are sorted-distinct by construction, so the
-    // intersection count can come from the native zero-allocation
-    // merge scan (plans/IntersectSizeSorted) when the graft extension
-    // is loaded; bare sessions fall back to the built-in (identical
-    // result, per-row hash set + materialized intersection)
-    val interSize =
-      if (pairs.sparkSession.catalog.functionExists("graft_intersect_size"))
-        call_function("graft_intersect_size", col("set_a"), col("set_b"))
-      else size(array_intersect(col("set_a"), col("set_b")))
+    // intersection count comes from the native zero-allocation merge
+    // scan (plans/IntersectSizeSorted) rather than array_intersect's
+    // per-row hash set + materialized intersection
+    val interSize = call_function("graft_intersect_size", col("set_a"), col("set_b"))
     pairs
       .join(sets.withColumnRenamed("_vid", "id_a").withColumnRenamed("_set", "set_a"), "id_a")
       .join(sets.withColumnRenamed("_vid", "id_b").withColumnRenamed("_set", "set_b"), "id_b")

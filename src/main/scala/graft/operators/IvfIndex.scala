@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index: build ONCE (codebook + cid-PARTITIONED
@@ -188,18 +187,17 @@ object IvfIndex {
     }
   }
 
-  /** The scan-speed assignment projection (shared by build and by
-    * incremental appends). Routes through the native graft_ivf_top
-    * expression when loaded — the greatest-tree fallback stops
-    * compiling at the ⌈√n⌉ codebook sizes a real index uses. */
+  /** The scan-speed assignment projection (shared by build, by
+    * incremental appends and by Similarity's inline IVF searches):
+    * each row with its cid from the native graft_ivf_top kernel,
+    * which stays one loop per row at the ⌈√n⌉ codebook sizes a real
+    * index uses, and its norm² `_n2c`. */
   def assignOnly(vectors: DataFrame,
-                 cents: Array[(Long, Array[Long])]): DataFrame = {
-    val sp = vectors.sparkSession
+                 cents: Array[(Long, Array[Long])]): DataFrame =
     vectors
-      .withColumn("cid", Similarity.ivfAssignAuto(sp, col("query_vec"), cents))
+      .withColumn("cid", Similarity.ivfAssign(col("query_vec"), cents))
       .withColumn("_n2c",
-        Similarity.dotFast(sp, col("query_vec"), col("query_vec")))
-  }
+        Similarity.dotFast(col("query_vec"), col("query_vec")))
 
   def centroids(spark: SparkSession, path: String): Array[(Long, Array[Long])] =
     spark.read.parquet(s"$path/centroids")
@@ -213,26 +211,12 @@ object IvfIndex {
     * visible in the plan — no reliance on runtime DPP. */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
            k: Int, nprobe: Int): DataFrame = {
-    val dot = Similarity.dotFast(spark, _: org.apache.spark.sql.Column,
-      _: org.apache.spark.sql.Column)
-    val cents = centroids(spark, path)
-    val probes = Similarity.ivfProbesAuto(queries, cents, nprobe)
-      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
+    val probes = Similarity.ivfProbes(queries, centroids(spark, path), nprobe)
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.getLong(0)).sorted
     val lists = spark.read.parquet(s"$path/lists")
       .where(col("cid").isin(probedCids: _*))
       .withColumn("cid", col("cid").cast("long"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    lists.join(broadcast(probes), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double")))
-          .cast("double"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    Similarity.probedTopK(lists, probes, k)((l, p) => l.join(broadcast(p), "cid"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Semantic (embedding-space) deduplication: k-means clustering over
@@ -37,9 +37,8 @@ object SemanticDedup {
     */
   def lloydStep(corpus: DataFrame,
                 cents: Array[(Long, Array[Long])]): Array[(Long, Array[Long])] = {
-    val sp = corpus.sparkSession
     corpus
-      .withColumn("cid", Similarity.ivfAssignAuto(sp, col("query_vec"), cents))
+      .withColumn("cid", Similarity.ivfAssign(col("query_vec"), cents))
       .select(col("cid"), posexplode(col("query_vec")))
       .groupBy(col("cid"), col("pos"))
       .agg(sum(col("col")).as("s"))
@@ -80,8 +79,8 @@ object SemanticDedup {
     * broadcast relation (no per-task serialized-plan blowup, no
     * Janino ceiling); scoring streams through codegen; the argmax is
     * a lexicographic max of struct(score, -cid) — bit-identical
-    * semantics to [[Similarity.ivfAssignExpr]] (same exact integer
-    * dot, same sqrt, ties → smallest cid), which the spec pins.
+    * semantics to [[Similarity.ivfAssign]] (same exact integer dot,
+    * same sqrt, ties → smallest cid), which the spec pins.
     *
     * Cost vs the literal path: the n×k scored stream never
     * materializes, but the per-vector argmax is one extra keyed
@@ -89,13 +88,11 @@ object SemanticDedup {
     * the (vec_id, cluster) assignment back to the corpus — the price
     * of a codebook too big to inline. Returns (vec_id, cluster). */
   def assignByJoin(corpus: DataFrame, cents: DataFrame): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = Similarity.dotFast(sp, _: Column, _: Column)
     corpus.select(col("vec_id"), col("query_vec"))
       .join(broadcast(cents.select(col("cid"), col("cv"))))
       .withColumn("_score",
-        dot(col("query_vec"), col("cv")).cast("double") /
-          sqrt(dot(col("cv"), col("cv")).cast("double")))
+        Similarity.dotFast(col("query_vec"), col("cv")).cast("double") /
+          sqrt(Similarity.dotFast(col("cv"), col("cv")).cast("double")))
       .groupBy(col("vec_id"))
       .agg((-max(struct(col("_score").as("s"), (-col("cid")).as("n")))
         .getField("n")).as("cluster"))
@@ -111,12 +108,10 @@ object SemanticDedup {
     * survivors.
     */
   def semdup(corpus: DataFrame, k: Int, iters: Int, tau: Double): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = Similarity.dotFast(sp, _: Column, _: Column)
     val cents = kmeans(corpus, k, iters)
     val assigned = corpus
-      .withColumn("cluster", Similarity.ivfAssignExpr(sp, col("query_vec"), cents))
-      .withColumn("_n2", dot(col("query_vec"), col("query_vec")))
+      .withColumn("cluster", Similarity.ivfAssign(col("query_vec"), cents))
+      .withColumn("_n2", Similarity.dotFast(col("query_vec"), col("query_vec")))
     val a = assigned.select(col("cluster"), col("vec_id").as("id_a"),
       col("query_vec").as("va"), col("_n2").as("n2a"))
     val b = assigned.select(col("cluster"), col("vec_id").as("id_b"),
@@ -126,7 +121,7 @@ object SemanticDedup {
     val dups = a.join(b, Seq("cluster"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cosine",
-        (dot(col("va"), col("vb")).cast("double") /
+        (Similarity.dotFast(col("va"), col("vb")).cast("double") /
           sqrt(col("n2a").cast("double") * col("n2b").cast("double"))).cast("double"))
       .filter(col("cosine") >= tau)
       .groupBy(col("id_b").as("vec_id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,12 +31,10 @@ object Similarity {
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Native codegen'd dot product when the graft extension is loaded
-    * (spark.sql.extensions=graft.plans.GraftExtensions), identical
-    * long results either way — so oracle parity is unaffected. */
-  def dotFast(spark: SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_dot_long")) call_function("graft_dot_long", a, b)
-    else dotQ(a, b)
+  /** Native codegen'd dot product (graft_dot_long, registered by
+    * graft.plans.GraftExtensions): the same long as [[dotQ]], so
+    * oracle parity is unaffected. */
+  def dotFast(a: Column, b: Column): Column = call_function("graft_dot_long", a, b)
 
   /** Cosine similarity from quantized integer dots (deterministic). */
   def cosineQ(a: Column, b: Column): Column =
@@ -52,14 +50,13 @@ object Similarity {
     * dot/sqrt(n2a·n2b) double arithmetic of the oracle.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val sp = corpus.sparkSession
     val c2 = corpus.withColumn("_n2c",
-      dotFast(sp, col("query_vec"), col("query_vec")))
-    val q2 = queries.withColumn("_n2q", dotFast(sp, col("qvec"), col("qvec")))
+      dotFast(col("query_vec"), col("query_vec")))
+    val q2 = queries.withColumn("_n2q", dotFast(col("qvec"), col("qvec")))
     val scored = c2.crossJoin(broadcast(q2))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("cosine",
-        (dotFast(sp, col("query_vec"), col("qvec")).cast("double") /
+        (dotFast(col("query_vec"), col("qvec")).cast("double") /
           sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("vec_id").asc)
@@ -222,80 +219,55 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
 
-  /** |c| from an exact integer norm² (quantized values keep every
-    * partial sum below 2^53, so the double is exact cross-engine). */
-  private def centNorm(cv: Array[Long]): Double =
-    math.sqrt(cv.map(x => x * x).sum.toDouble)
-
-  /** Nearest-centroid id as ONE codegen'd expression: greatest over k
-    * struct(score, -cid) literals — the inverted-list build is a pure
-    * projection, no join, no shuffle; the corpus keeps its scan
-    * partitioning. Score = dot(v,c)/|c| (the |v| factor is constant
-    * per row and cannot change the argmax). Ties → smallest cid. */
-  def ivfAssignExpr(spark: SparkSession, vec: Column,
-                    cents: Array[(Long, Array[Long])]): Column = {
-    val scored = cents.map { case (cid, cv) =>
-      val score = dotFast(spark, vec, array(cv.map(lit(_)): _*)).cast("double") /
-        lit(centNorm(cv))
-      struct(score.as("s"), lit(-cid).as("n"))
+  /** Top-p centroid indices per row as ONE native projection
+    * (graft_ivf_top, or graft_ivf_top_l2 when `l2`; see
+    * [[graft.plans.IvfTopCentroids]]): a data-driven O(k·d) loop per
+    * row, no join, no shuffle, so the corpus keeps its scan
+    * partitioning at any codebook size (a k-literal expression tree
+    * stops analyzing/compiling in the hundreds of centroids a ⌈√n⌉
+    * codebook needs). Cosine mode scores dot(v,c)/|c| (the |v| factor
+    * is constant per row and cannot change the order); L2 mode scores
+    * 2v·c − ‖c‖², descending ≡ ascending ‖c−v‖². Both aux values come
+    * from an exact integer norm² (quantized values keep every partial
+    * sum below 2^53), so the doubles are exact cross-engine. The
+    * codebook goes in cid-SORTED, so the kernel's tie toward the
+    * smaller index is the family's tie toward the smaller cid.
+    * Returns (cid by 0-based index, top-p index array). */
+  private def ivfTop(vec: Column, cents: Array[(Long, Array[Long])], p: Int,
+                     l2: Boolean): (Column, Column) = {
+    val sorted = cents.sortBy(_._1)
+    val aux = sorted.map { case (_, cv) =>
+      val n2 = cv.map(x => x * x).sum.toDouble
+      if (l2) n2 else math.sqrt(n2)
     }
-    // greatest() requires >1 args; a 1-entry codebook assigns trivially
-    if (scored.length == 1) lit(cents.head._1)
-    else -greatest(scored: _*).getField("n")
+    val top = call_function(if (l2) "graft_ivf_top_l2" else "graft_ivf_top", vec,
+      typedLit(sorted.map(_._2.toSeq).toSeq), typedLit(aux.toSeq), lit(p))
+    (array(sorted.map(c => lit(c._1)): _*), top)
   }
 
-  /** Nearest centroid by L2 (argmin ‖v−c‖² = argmin ‖c‖² − 2v·c; the
-    * ‖v‖² term is constant per row). The residual-coding assignment:
-    * [[ivfAssignExpr]]'s cosine rule is scale-invariant and can pick
-    * an angularly-close but L2-FAR centroid, which would inflate the
-    * residuals PQ codes must then capture. Ties → smallest cid. */
-  def ivfAssignL2Expr(spark: SparkSession, vec: Column,
-                      cents: Array[(Long, Array[Long])]): Column = {
-    val scored = cents.map { case (cid, cv) =>
-      val d = (lit(cv.map(x => x * x).sum) -
-        lit(2L) * dotFast(spark, vec, array(cv.map(lit(_)): _*))).cast("double")
-      struct((-d).as("s"), lit(-cid).as("n")) // greatest ⇒ min distance
-    }
-    if (scored.length == 1) lit(cents.head._1)
-    else -greatest(scored: _*).getField("n")
+  /** Nearest-centroid cid, ties → smallest cid. `l2` is the
+    * residual-coding assignment: the cosine rule is scale-invariant
+    * and can pick an angularly-close but L2-FAR centroid, which would
+    * inflate the residuals PQ codes must then capture. A null vector
+    * gets a null cid, so it lands in no list. That needs
+    * try_element_at: under ANSI, element_at over the null-free cid
+    * array is typed NOT NULL even when its index is null, so the null
+    * would come out as cid 0. */
+  def ivfAssign(vec: Column, cents: Array[(Long, Array[Long])],
+                l2: Boolean = false): Column = {
+    val (cidAt, top) = ivfTop(vec, cents, 1, l2)
+    try_element_at(cidAt, element_at(top, 1) + 1)
   }
 
-  /** Top-nprobe centroid lists per query by ascending L2 — the probe
-    * rule matching [[ivfAssignL2Expr]]'s geometry. */
-  def ivfProbesL2(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                  nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    import sp.implicits._
-    val centDf = cents.toSeq
-      .map { case (cid, cv) => (cid, cv.toSeq, cv.map(x => x * x).sum) }
-      .toDF("cid", "cvec", "cn2")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("_pdist").asc, col("cid").asc)
-    queries.crossJoin(broadcast(centDf))
-      .withColumn("_pdist",
-        (col("cn2") - lit(2L) * dotFast(sp, col("qvec"), col("cvec"))).cast("double"))
-      .withColumn("_prank", row_number().over(w))
-      .filter(col("_prank") <= nprobe)
-      .select(col("query_id"), col("qvec"), col("cid"))
-  }
-
-  /** Top-nprobe centroid lists per query (queries are the small,
-    * broadcast-bounded side; |Q|·k probe scoring is negligible). */
+  /** Top-nprobe (query_id, qvec, cid) probe rows per query, one
+    * projection + explode under [[ivfAssign]]'s scoring rule. A null
+    * query vector yields no probe rows. */
   def ivfProbes(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    import sp.implicits._
-    val centDf = cents.toSeq
-      .map { case (cid, cv) => (cid, cv.toSeq, centNorm(cv)) }
-      .toDF("cid", "cvec", "cnorm")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("_pscore").desc, col("cid").asc)
-    queries.crossJoin(broadcast(centDf))
-      .withColumn("_pscore",
-        dotFast(sp, col("qvec"), col("cvec")).cast("double") / col("cnorm"))
-      .withColumn("_prank", row_number().over(w))
-      .filter(col("_prank") <= nprobe)
-      .select(col("query_id"), col("qvec"), col("cid"))
+                nprobe: Int, l2: Boolean = false): DataFrame = {
+    val (cidAt, top) = ivfTop(col("qvec"), cents, nprobe, l2)
+    queries.select(col("query_id"), col("qvec"), explode(top).as("_pidx"))
+      .select(col("query_id"), col("qvec"),
+        element_at(cidAt, col("_pidx") + 1).as("cid"))
   }
 
   /** IVF-flat probed search: assign corpus rows to inverted lists
@@ -304,76 +276,11 @@ object Similarity {
     * The scale path alternative to SRP-LSH: scoring cost drops from
     * |Q|·|C| to |Q|·nprobe·E[list size]; corpus never shuffles before
     * the final top-k (which ships only candidates). */
-  /** graft_ivf_top call against a cid-SORTED codebook (index order ==
-    * cid order, so the expression's tie-toward-smaller-index is the
-    * family's tie-toward-smaller-cid). */
-  private def ivfTopExpr(vec: Column, sorted: Array[(Long, Array[Long])],
-                         p: Int): Column =
-    call_function("graft_ivf_top", vec,
-      typedLit(sorted.map(_._2.toSeq).toSeq),
-      typedLit(sorted.map(c => centNorm(c._2)).toSeq), lit(p))
-
-  /** Nearest-centroid cid as one projection: the native O(k·d)-loop
-    * expression when the graft extension is loaded, the
-    * [[ivfAssignExpr]] greatest-tree otherwise (identical results —
-    * IvfAutoSpec pins the parity). The native path is what makes a
-    * ⌈√n⌉ codebook viable: a k-literal expression tree stops
-    * analyzing/compiling in the hundreds of centroids. */
-  def ivfAssignAuto(sp: SparkSession, vec: Column,
-                    cents: Array[(Long, Array[Long])]): Column =
-    if (sp.catalog.functionExists("graft_ivf_top")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      element_at(cidByIdx, element_at(ivfTopExpr(vec, sorted, 1), 1) + 1)
-    } else ivfAssignExpr(sp, vec, cents)
-
-  /** Top-nprobe probe lists per query as one projection + explode
-    * (native), or the [[ivfProbes]] crossJoin+window fallback —
-    * identical (query_id, qvec, cid) rows either way. */
-  def ivfProbesAuto(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                    nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    if (sp.catalog.functionExists("graft_ivf_top")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      queries.select(col("query_id"), col("qvec"),
-        explode(ivfTopExpr(col("qvec"), sorted, nprobe)).as("_pidx"))
-        .select(col("query_id"), col("qvec"),
-          element_at(cidByIdx, col("_pidx") + 1).as("cid"))
-    } else ivfProbes(queries, cents, nprobe)
-  }
-
-  /** L2-mode twin of [[ivfTopExpr]]: aux carries ‖c‖² (exact integer
-    * doubles), descending 2v·c − ‖c‖² ≡ ascending ‖c−v‖². */
-  private def ivfTopL2Expr(vec: Column, sorted: Array[(Long, Array[Long])],
-                           p: Int): Column =
-    call_function("graft_ivf_top_l2", vec,
-      typedLit(sorted.map(_._2.toSeq).toSeq),
-      typedLit(sorted.map(_._2.map(x => x * x).sum.toDouble).toSeq), lit(p))
-
-  /** L2 nearest-centroid assignment as one projection (native or
-    * [[ivfAssignL2Expr]] fallback, identical results). */
-  def ivfAssignL2Auto(sp: SparkSession, vec: Column,
-                      cents: Array[(Long, Array[Long])]): Column =
-    if (sp.catalog.functionExists("graft_ivf_top_l2")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      element_at(cidByIdx, element_at(ivfTopL2Expr(vec, sorted, 1), 1) + 1)
-    } else ivfAssignL2Expr(sp, vec, cents)
-
-  /** L2 top-nprobe probes as one projection + explode (native or
-    * [[ivfProbesL2]] fallback, identical rows). */
-  def ivfProbesL2Auto(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                      nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    if (sp.catalog.functionExists("graft_ivf_top_l2")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      queries.select(col("query_id"), col("qvec"),
-        explode(ivfTopL2Expr(col("qvec"), sorted, nprobe)).as("_pidx"))
-        .select(col("query_id"), col("qvec"),
-          element_at(cidByIdx, col("_pidx") + 1).as("cid"))
-    } else ivfProbesL2(queries, cents, nprobe)
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+              numCentroids: Int, nprobe: Int): DataFrame = {
+    val cents = ivfCentroids(corpus, numCentroids)
+    probedTopK(IvfIndex.assignOnly(corpus, cents), ivfProbes(queries, cents, nprobe), k)(
+      (l, p) => l.join(broadcast(p), "cid"))
   }
 
   /** Corpus-scaled IVF-flat: numCentroids = ⌈√n⌉ — the balance point
@@ -381,20 +288,15 @@ object Similarity {
     * scoring (both land at n^1.5 under a corpus-proportional query
     * load, the IVF asymptote; the fixed-k variant above is quadratic
     * there, measured e=2.1 with 13 GB of window spill at the sf10
-    * sweep point). Three plan changes make √n lists viable:
-    *   - assignment AND probing go through the native
-    *     graft_ivf_top expression (one data-driven O(k·d) loop per
-    *     row) instead of a k-literal greatest() tree / a
-    *     crossJoin+window — both pure projections, no shuffle;
+    * sweep point). Two plan choices make √n lists viable on top of
+    * the native assign/probe projections:
     *   - the candidate join carries no broadcast hint: the planner
     *     broadcasts the |Q|·nprobe probe side while it is small and
     *     shuffle-joins on cid at scale (a corpus-proportional query
     *     set cannot be broadcast at 100 TB);
     *   - the per-query top-k rides WindowGroupLimit (rank ≤ k pushes
     *     a map-side partial top-k under the exchange), so the window
-    *     shuffle ships ≤ k·nprobe rows per query, not whole lists.
-    * Falls back to the compositional assign/probe (identical
-    * results) when the graft extension is not loaded. */
+    *     shuffle ships ≤ k·nprobe rows per query, not whole lists. */
   def ivfTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
                   nprobe: Int): DataFrame = {
     val n = corpus.count()
@@ -403,67 +305,49 @@ object Similarity {
       knownN = n)
   }
 
-  /** The auto-discipline IVF search tail against an ARBITRARY
-    * codebook (md5 draw, Lloyd-refined, externally trained):
-    * native-projection assign/probe, planner-chosen join side,
-    * WindowGroupLimit top-k. Centroids are (cid, integer vector) —
-    * sum vectors are fine (cosine is scale-invariant). */
+  /** The auto-discipline IVF search against an ARBITRARY codebook
+    * (md5 draw, Lloyd-refined, externally trained): native-projection
+    * assign/probe, planner-chosen join side, WindowGroupLimit top-k.
+    * Centroids are (cid, integer vector) — sum vectors are fine
+    * (cosine is scale-invariant).
+    *
+    * CANDIDATE-frame sizing (the r10 sf100 find): the cid join emits
+    * |Q|·nprobe·(n/numC) candidate rows — decoupled from both inputs
+    * — so both sides go through the gated two-sided cid sizer (|Q|
+    * over-bounded by n — an unfiltered parquet-backed count is
+    * metadata-cheap, a filtered query count would be a scan). Callers
+    * that already counted (ivfTopKAuto sizes its codebook from n) pass
+    * knownN so the count job runs once per search, not twice — and a
+    * DERIVED corpus (filtered, joined) pays its one scan once. */
   def ivfSearchWith(corpus: DataFrame, queries: DataFrame, k: Int,
                     nprobe: Int, cents: Array[(Long, Array[Long])],
                     knownN: Long = -1L): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
-    val assigned = corpus
-      .withColumn("cid", ivfAssignAuto(sp, col("query_vec"), cents))
-      .withColumn("_n2c", dot(col("query_vec"), col("query_vec")))
-    val probes = ivfProbesAuto(queries, cents, nprobe)
-      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
-    // CANDIDATE-frame sizing (the r10 sf100 find): the cid join emits
-    // |Q|·nprobe·(n/numC) candidate rows — decoupled from both inputs
-    // — and the rank-k window's partial top-k sorts them WITH the two
-    // 128-long vectors still aboard; at sf100 (1.1B candidates, 8
-    // session partitions) that partial sort spilled 17 GB. Two fixes,
-    // both below: the gated two-sided cid sizing (|Q| over-bounded by
-    // n — an unfiltered parquet-backed count is metadata-cheap, a
-    // filtered query count would be a scan), and a NARROW projection
-    // (query_id, vec_id, cosine) before the window so the sort
-    // carries ~30 B/row instead of ~2 KB. Callers that already
-    // counted (ivfTopKAuto sizes its codebook from n) pass knownN so
-    // the count job runs once per search, not twice — and a DERIVED
-    // corpus (filtered, joined) pays its one scan once.
     val n = if (knownN >= 0L) knownN else corpus.count()
     val est = candidateEstimate(n, nprobe, cents.length)
-    val sized = graft.queries.ExplodedJoin.sizer(sp, est, col("cid"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    sized(assigned).join(sized(probes), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    val sized = graft.queries.ExplodedJoin.sizer(corpus.sparkSession, est, col("cid"))
+    probedTopK(IvfIndex.assignOnly(corpus, cents), ivfProbes(queries, cents, nprobe), k)(
+      (l, p) => sized(l).join(sized(p), "cid"))
   }
 
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              numCentroids: Int, nprobe: Int): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
-    val cents = ivfCentroids(corpus, numCentroids)
-    val assigned = corpus
-      .withColumn("cid", ivfAssignExpr(sp, col("query_vec"), cents))
-      .withColumn("_n2c", dot(col("query_vec"), col("query_vec")))
-    val probes = ivfProbes(queries, cents, nprobe)
-      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
+  /** The probed re-rank tail of the IVF family ([[ivfTopK]],
+    * [[ivfSearchWith]], IvfIndex.topK): `join` pairs the inverted
+    * lists (IvfIndex.assignOnly's rows) with the probe rows, each
+    * caller keeping its own join strategy; then self pairs drop, the
+    * exact cosine is scored, and the rows narrow to (query_id,
+    * vec_id, cosine) BEFORE the rank window, so its partial top-k
+    * sorts ~30 B rows instead of rows carrying two 64-long vectors
+    * (at sf100 the wide sort spilled 17 GB); per-query top-k by
+    * (cosine desc, vec_id). */
+  private[operators] def probedTopK(lists: DataFrame, probes: DataFrame, k: Int)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("vec_id").asc)
-    assigned.join(broadcast(probes), "cid")
+    join(lists, probes.withColumn("_n2q", dotFast(col("qvec"), col("qvec"))))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
+        (dotFast(col("query_vec"), col("qvec")).cast("double") /
           sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
+      .select(col("query_id"), col("vec_id"), col("cosine"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
@@ -533,16 +417,15 @@ object Similarity {
     * k best per query by integer-exact L2. */
   private def exactL2Rerank(cands: DataFrame, corpus: DataFrame,
                             queries: DataFrame, k: Int): DataFrame = {
-    val sp = corpus.sparkSession
     val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dotFast(sp, col("query_vec"), col("query_vec")).as("_n2c"))
+      dotFast(col("query_vec"), col("query_vec")).as("_n2c"))
     val q2 = queries.select(col("query_id"), col("qvec"),
-      dotFast(sp, col("qvec"), col("qvec")).as("_n2q"))
+      dotFast(col("qvec"), col("qvec")).as("_n2q"))
     val we = Window.partitionBy("query_id")
       .orderBy(col("l2_dist").asc, col("vec_id").asc)
     cands.join(c2, "vec_id").join(broadcast(q2), "query_id")
       .withColumn("l2_dist",
-        col("_n2c") - lit(2L) * dotFast(sp, col("query_vec"), col("qvec")) + col("_n2q"))
+        col("_n2c") - lit(2L) * dotFast(col("query_vec"), col("qvec")) + col("_n2q"))
       .withColumn("rank", row_number().over(we))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"),
@@ -565,16 +448,15 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 numCentroids: Int, nprobe: Int,
                 ks: Int, m: Int, dim: Int, shortlist: Int): DataFrame = {
-    val sp = corpus.sparkSession
     val subDim = dim / m
     val cents = ivfCentroids(corpus, numCentroids)
     val sub = pqCodebooks(corpus, ks, m, dim)
     val coded = corpus.select(
       col("vec_id") +:
-        ivfAssignAuto(sp, col("query_vec"), cents).as("cid") +:
+        ivfAssign(col("query_vec"), cents).as("cid") +:
         (0 until m).map(j =>
           pqCodeExpr(col("query_vec"), sub, subDim, j).as(s"c$j")): _*)
-    val probeTables = ivfProbesAuto(queries, cents, nprobe)
+    val probeTables = ivfProbes(queries, cents, nprobe)
       .select("query_id", "cid")
       .join(pqQueryTables(queries, sub, m, subDim), "query_id")
     val wa = Window.partitionBy("query_id")
@@ -658,7 +540,6 @@ object Similarity {
     val sp = corpus.sparkSession
     import sp.implicits._
     val subDim = dim / m
-    def hinted(df: DataFrame): DataFrame = if (hintBroadcast) broadcast(df) else df
     val centDf = cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
       .toDF("cid", "cvec")
     // L2 assignment, NOT the cosine assignment q119/q75 use: the ADC
@@ -669,7 +550,7 @@ object Similarity {
     // capture (FAISS trains/assigns its coarse quantizer in L2 for
     // exactly this reason)
     val res = corpus
-      .withColumn("cid", ivfAssignL2Auto(sp, col("query_vec"), cents))
+      .withColumn("cid", ivfAssign(col("query_vec"), cents, l2 = true))
       .join(broadcast(centDf), "cid")
       .withColumn("rvec", zip_with(col("query_vec"), col("cvec"), (a, b) => a - b))
     // PQ codebooks trained on the residual frame. The draw is SALTED
@@ -697,7 +578,7 @@ object Similarity {
         (dotQ(qj, qj) - lit(2L) * dotQ(qj, e.getField("cv")) +
           e.getField("n")).cast("long"))
     }
-    val probeTables = ivfProbesL2Auto(queries, cents, nprobe)
+    val probeTables = ivfProbes(queries, cents, nprobe, l2 = true)
       .join(broadcast(centDf), "cid")
       .withColumn("rqvec", zip_with(col("qvec"), col("cvec"), (a, b) => a - b))
       .select(col("query_id") +: col("cid") +:
@@ -785,25 +666,23 @@ object Similarity {
     * column (or index) so the scan reads headDim/dim of the bytes. */
   def truncatedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                     headDim: Int, shortlist: Int): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
     // _n2h/_n2qh > 0 guards: a vector whose head prefix is all zeros
     // would give 0/0 = NaN head_cosine, and NaN sorts ABOVE every
     // real score in a descending window — flooding the shortlist.
     // Zero-head vectors are legitimately unrankable by the head
     // stage, so they are excluded (mirrored in the q103 oracle).
     val ch = corpus.select(col("vec_id"), slice(col("query_vec"), 1, headDim).as("hv"))
-      .withColumn("_n2h", dot(col("hv"), col("hv")))
+      .withColumn("_n2h", dotFast(col("hv"), col("hv")))
       .filter(col("_n2h") > 0)
     val qh = queries.select(col("query_id"), slice(col("qvec"), 1, headDim).as("qh"))
-      .withColumn("_n2qh", dot(col("qh"), col("qh")))
+      .withColumn("_n2qh", dotFast(col("qh"), col("qh")))
       .filter(col("_n2qh") > 0)
     val wa = Window.partitionBy("query_id")
       .orderBy(col("head_cosine").desc, col("vec_id").asc)
     val cands = ch.crossJoin(broadcast(qh))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("head_cosine",
-        (dot(col("hv"), col("qh")).cast("double") /
+        (dotFast(col("hv"), col("qh")).cast("double") /
           sqrt(col("_n2qh").cast("double") * col("_n2h").cast("double"))).cast("double"))
       .withColumn("_hrank", row_number().over(wa))
       .filter(col("_hrank") <= shortlist)
@@ -966,17 +845,15 @@ object Similarity {
   def exactCosineRerank(cands: DataFrame, corpus: DataFrame,
                         queries: DataFrame, k: Int,
                         carry: Seq[String] = Nil): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
     val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dot(col("query_vec"), col("query_vec")).as("_n2c"))
+      dotFast(col("query_vec"), col("query_vec")).as("_n2c"))
     val q2 = queries.select(col("query_id"), col("qvec"),
-      dot(col("qvec"), col("qvec")).as("_n2q"))
+      dotFast(col("qvec"), col("qvec")).as("_n2q"))
     val we = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("vec_id").asc)
     cands.join(c2, "vec_id").join(broadcast(q2), "query_id")
       .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
+        (dotFast(col("query_vec"), col("qvec")).cast("double") /
           sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
       .withColumn("rank", row_number().over(we))
       .filter(col("rank") <= k)
@@ -1028,7 +905,6 @@ object Similarity {
               estQueries: Long = -1L): DataFrame = {
     require(multiProbe >= 0 && multiProbe <= bitsPerBand)
     val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
     // Candidate-frame sizing (the round-11 sf100 find, mirroring
     // ivfSearchWith): the bucket-join emits ~|Q|·bands·(1+probe)·
     // occupancy rows — decoupled from both inputs — and the vector
@@ -1047,7 +923,7 @@ object Similarity {
     else identity[DataFrame] _
     val flipsSeq: Seq[Long] = 0L +: (0 until multiProbe).map(1L << _).map(_.toLong)
     val bandC = corpus
-      .select(col("vec_id"), srpBandKeys(col("query_vec"), ps, bands, bitsPerBand, dot).as("_vkeys"))
+      .select(col("vec_id"), srpBandKeys(col("query_vec"), ps, bands, bitsPerBand, dotFast).as("_vkeys"))
       .select(col("vec_id"), col("_vkeys"), posexplode(col("_vkeys")))
       .select(col("vec_id"), col("_vkeys"), col("pos").as("band"), col("col").as("bkey"))
     // flip mask 0 keeps the exact bucket; masks 2^j probe 1-bit
@@ -1055,7 +931,7 @@ object Similarity {
     // the flip explode entirely)
     val flips = array(flipsSeq.map(lit(_)): _*)
     val exploded = queries
-      .select(col("query_id"), srpBandKeys(col("qvec"), ps, bands, bitsPerBand, dot).as("_qkeys"))
+      .select(col("query_id"), srpBandKeys(col("qvec"), ps, bands, bitsPerBand, dotFast).as("_qkeys"))
       .select(col("query_id"), col("_qkeys"), posexplode(col("_qkeys")))
     val bandQ =
       if (multiProbe == 0)
@@ -1093,13 +969,13 @@ object Similarity {
       .filter(col("query_id") =!= col("vec_id"))
       .select("query_id", "vec_id")
     val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dot(col("query_vec"), col("query_vec")).as("_n2c"))
+      dotFast(col("query_vec"), col("query_vec")).as("_n2c"))
     val q2 = queries.select(col("query_id"), col("qvec"),
-      dot(col("qvec"), col("qvec")).as("_n2q"))
+      dotFast(col("qvec"), col("qvec")).as("_n2q"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("vec_id").asc)
     val cosine =
-      (dot(col("query_vec"), col("qvec")).cast("double") /
+      (dotFast(col("query_vec"), col("qvec")).cast("double") /
         sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double")
     // NARROW pair rows re-attach the corpus vectors by vec_id (both
     // sides share the vec_id sizer — equal partition counts

@@ -11,6 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * rules ([[RewriteDotProduct]], [[RewriteBoundedLevenshtein]]), one
   * AQE runtime optimizer rule ([[SmallSortInOnePartition]]) and one
   * planner strategy (SessionizeStrategy).
+  *
+  * The extension is required, not optional: every operator that calls
+  * a graft_* function has that one code path and no built-in
+  * fallback, so on a session without it the call fails at analysis
+  * with UNRESOLVED_ROUTINE. `graft.GraftSession` always loads it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * formulation): score(c) = dot(vec, codebook[c]) / aux[c] in cosine
   * mode (aux = |c|), or 2·dot − aux[c] in L2 mode (aux = ‖c‖²:
   * descending 2v·c − ‖c‖² ≡ ascending ‖c−v‖², the residual-coding
-  * assignment rule of [[graft.operators.Similarity.ivfAssignL2Expr]]).
+  * rule of [[graft.operators.Similarity.ivfAssign]] with `l2 = true`).
   * Doubles descending, ties broken toward the SMALLER index —
   * iterate ascending and insert only on strictly-greater score.
   * Returns the min(p, k) top indices. Null vector → null; a centroid

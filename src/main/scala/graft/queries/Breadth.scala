@@ -62,8 +62,7 @@ object Breadth {
     * string carries the same information for the compare. */
   def q68ArrayOps(s: SparkSession, dir: String): DataFrame = {
     val toks = graft.operators.TextAnalysis.tokens(col("text"))
-    Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-      rowsPerTask = 250L) // fanOut (r12): tokenize + vocab sort map-side
+    Tables.fannedDocs(s, dir) // fanOut (r12): tokenize + vocab sort map-side
       .select(col("doc_id"), toks.as("t"))
       .select(
         col("doc_id"),

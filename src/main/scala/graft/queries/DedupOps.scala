@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.Tables.fannedDocs
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,14 +16,6 @@ import org.apache.spark.sql.functions._
 object DedupOps {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** fanOut (r12): every query in this module runs per-doc shingle +
-    * hash kernels (minhash k=16, simhash, winnowing, Jaccard verify)
-    * map-side over the documents scan — one task on a single-split
-    * file; fan out (identity at production scale, Tables.fanOut). */
-  private def fannedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-      rowsPerTask = 250L)
 
   /** MinHash(16) + LSH(4 bands × 4 rows) candidate pairs, verified
     * with exact 3-shingle Jaccard. The full scalable near-dup

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.Tables.fannedDocs
 import graft.operators.{Dedup, Triangles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,15 +12,6 @@ import org.apache.spark.sql.functions._
   * in [[graft.operators.Dedup]]; triangle counting here).
   */
 object GraphOps {
-
-  /** fanOut (r12): per-doc text kernels (tokenize, n-gram HOFs,
-    * hashes) run map-side over a single-split documents scan — one
-    * task at any core count; fan out, identity at production scale
-    * (Tables.fanOut). */
-  private def fannedDocs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Tables.fanOut(graft.Tables.documents(s, dir), s, dir, "documents",
-      rowsPerTask = 250L)
-
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.Tables.fannedDocs
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -19,15 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object MixOps {
 
-  /** fanOut (r12): per-doc text kernels (tokenize, n-gram HOFs,
-    * hashes) run map-side over a single-split documents scan — one
-    * task at any core count; fan out, identity at production scale
-    * (Tables.fanOut). */
-  private def fannedDocs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-      rowsPerTask = 250L)
-
-
   type Q = (SparkSession, String) => DataFrame
 
   private def toks: Column =
@@ -44,8 +36,7 @@ object MixOps {
     * corpus's short synthetic docs. */
   def q208RepetitionSignals(s: SparkSession, dir: String): DataFrame = {
     // fanOut (r12): per-doc top-word / trigram HOFs are map-side only
-    val d = Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-      rowsPerTask = 250L).select(col("doc_id"), toks.as("toks"))
+    val d = fannedDocs(s, dir).select(col("doc_id"), toks.as("toks"))
     val n = size(col("toks"))
     val topCnt = coalesce(
       array_max(transform(array_distinct(col("toks")),
@@ -167,21 +158,18 @@ object MixOps {
     val testGrams = sized(grams.filter(col("frac") < TestFrac))
       .select("gram").distinct()
     val trainGrams = grams.filter(col("frac") >= TestFrac)
-    val probed =
-      if (s.catalog.functionExists("graft_might_contain")) {
-        // capacity tracks the measured eval-gram count up to ~7 MB of
-        // filter bytes (8M keys at 3% fpp) — the task-binary budget a
-        // plan literal must respect; the 1M cap this replaces
-        // saturated one decade early (sf100's ~20M eval grams pushed
-        // FP toward 1 and re-created the unsized q209 join wholesale)
-        val nKeys = math.min(math.max(testGrams.count(), 1L), 8000000L)
-        val bloomBytes = testGrams
-          .agg(call_function("graft_bloom_agg",
-            xxhash64(col("gram")), lit(nKeys)).as("bf"))
-          .head().getAs[Array[Byte]](0)
-        trainGrams.filter(call_function("graft_might_contain",
-          lit(bloomBytes), xxhash64(col("gram"))))
-      } else trainGrams
+    // capacity tracks the measured eval-gram count up to ~7 MB of
+    // filter bytes (8M keys at 3% fpp) — the task-binary budget a
+    // plan literal must respect; the 1M cap this replaces saturated
+    // one decade early (sf100's ~20M eval grams pushed FP toward 1
+    // and re-created the unsized q209 join wholesale)
+    val nKeys = math.min(math.max(testGrams.count(), 1L), 8000000L)
+    val bloomBytes = testGrams
+      .agg(call_function("graft_bloom_agg",
+        xxhash64(col("gram")), lit(nKeys)).as("bf"))
+      .head().getAs[Array[Byte]](0)
+    val probed = trainGrams.filter(call_function("graft_might_contain",
+      lit(bloomBytes), xxhash64(col("gram"))))
     val shared = sized(probed).join(testGrams, "gram")
       .groupBy("doc_id")
       .agg(count_distinct(col("gram")).as("shared_ngrams"))
@@ -449,8 +437,7 @@ object MixOps {
     // (measured 9.9 s vs 0.5 s over the materialized arrays at
     // sf0.1); the returned frame recomputes base lazily in one
     // scan-speed pass, so no cache outlives the call
-    val base = Tables.fanOut(Tables.documents(s, dir), s, dir,
-        "documents", rowsPerTask = 250L)
+    val base = fannedDocs(s, dir)
       .select(col("doc_id"), toks.as("toks"), col("text"))
       .select(col("doc_id"),
         transform(concat(col("toks"), bigrams), f => bucket(f)).as("bks"),
@@ -642,8 +629,7 @@ object MixOps {
   def q212FilterReport(s: SparkSession, dir: String): DataFrame =
     // fanOut (r12): the rule gate's tokenize + trigram HOFs are pure
     // map-side work over the single-split scan
-    withFilterRules(Tables.fanOut(Tables.documents(s, dir), s, dir,
-        "documents", rowsPerTask = 250L)
+    withFilterRules(fannedDocs(s, dir)
         .select(col("doc_id"), col("lang"), col("text")))
       .select("doc_id", "lang", "token_count", "quality_score",
         "top_word_frac", "dup_trigram_frac", "failed_rules", "kept")
@@ -743,8 +729,7 @@ object MixOps {
     // persist pins that layout — every downstream stage then reads a
     // 1-partition cache until its first exchange. 250 docs/task
     // spreads the text work; identity at production scale (guide §2.5)
-    val d = Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-        rowsPerTask = 250L)
+    val d = fannedDocs(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
         toks.as("toks"), docFrac.as("frac"))

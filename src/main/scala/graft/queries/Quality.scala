@@ -963,9 +963,9 @@ object Quality {
     // is 40 md5s per event, all map-side before the 40-group exchange —
     // serial in the single scan task (4.25 s at local[32]); 4k
     // rows/task spreads the ladder, identity at production scale
-    val ev = Tables.fanOut(Tables.events(s, dir), s, dir, "events",
-      rowsPerTask = 4000L).select(col("event_id"),
-      (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+    val ev = Tables.fanOut(Tables.events(s, dir), s, dir, "events")
+      .select(col("event_id"),
+        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
     val rep = ev.select(col("event_id"), col("cents"),
       explode(sequence(lit(0), lit(39))).as("rep"))
     val u = conv(substring(md5(concat_ws("|", col("event_id"), col("rep"))),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.Tables.fannedDocs
 import graft.functions.Funcs
 import graft.operators.{SemanticDedup, Similarity, SuffixRank, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,23 +15,13 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOps {
 
-  /** fanOut (r12): per-doc text kernels (tokenize, n-gram HOFs,
-    * hashes) run map-side over a single-split documents scan — one
-    * task at any core count; fan out, identity at production scale
-    * (Tables.fanOut). */
-  private def fannedDocs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-      rowsPerTask = 250L)
-
-
   type Q = (SparkSession, String) => DataFrame
 
   private def quantized(s: SparkSession, dir: String): DataFrame =
     // fanOut (r12): shared source of this module's ANN queries — the
     // per-vector quantize/codebook/signature map work otherwise runs
     // in the single-split scan's one task
-    Tables.fanOut(Tables.embeddings(s, dir), s, dir, "embeddings",
-        rowsPerTask = 100L)
+    Tables.fanOut(Tables.embeddings(s, dir), s, dir, "embeddings")
       .select(col("vec_id"),
         Similarity.quantize(col("embedding")).as("query_vec"))
 
@@ -54,8 +45,7 @@ object ScaleOps {
     * customer segment's key hashes (graft_bloom_agg), prune orders at
     * scan speed (graft_might_contain), THEN join exactly — the result
     * is identical to the plain join (false positives die in the
-    * join), which is exactly what the oracle checks. Falls back to
-    * the unpruned join when the graft extension isn't loaded.
+    * join), which is exactly what the oracle checks.
     *
     * EAGER at build time (like q105): constructing this DataFrame
     * runs two driver actions — the dim count that sizes the filter
@@ -70,20 +60,17 @@ object ScaleOps {
       .select(col("c_custkey"), col("c_name"))
     val orders = Tables.orders(s, dir)
       .select(col("o_custkey"), col("o_totalprice"))
-    val pruned =
-      if (s.catalog.functionExists("graft_might_contain")) {
-        // size the filter from the build side (tiny driver scalar on
-        // the already-filtered dim) — a fixed oversize would inline
-        // megabytes of literal bits into every task's plan, and an
-        // uncapped build-side count would do the same for a huge dim
-        val dimKeys = math.min(math.max(cust.count(), 1L), MaxBloomKeys)
-        val bloomBytes = cust
-          .agg(call_function("graft_bloom_agg",
-            xxhash64(col("c_custkey")), lit(dimKeys)).as("bf"))
-          .head().getAs[Array[Byte]](0)
-        orders.filter(call_function("graft_might_contain",
-          lit(bloomBytes), xxhash64(col("o_custkey"))))
-      } else orders
+    // size the filter from the build side (tiny driver scalar on
+    // the already-filtered dim) — a fixed oversize would inline
+    // megabytes of literal bits into every task's plan, and an
+    // uncapped build-side count would do the same for a huge dim
+    val dimKeys = math.min(math.max(cust.count(), 1L), MaxBloomKeys)
+    val bloomBytes = cust
+      .agg(call_function("graft_bloom_agg",
+        xxhash64(col("c_custkey")), lit(dimKeys)).as("bf"))
+      .head().getAs[Array[Byte]](0)
+    val pruned = orders.filter(call_function("graft_might_contain",
+      lit(bloomBytes), xxhash64(col("o_custkey"))))
     pruned.join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"))
       .agg(count(lit(1)).as("order_count"),
@@ -117,8 +104,7 @@ object ScaleOps {
     val n = 8
     // fanOut (r12): tokenize + 8-gram HOF explode are map-side before
     // the sized gram exchange — single-split scan = one task otherwise
-    val t = Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-        rowsPerTask = 250L)
+    val t = fannedDocs(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     // gated gram-exchange sizing (ExplodedJoin, round-10 sweep of the
     // q225 hazard class); the doc-keyed count aggregates are hash
@@ -166,8 +152,7 @@ object ScaleOps {
     val n = 8
     // fanOut (r12): same as q100 — both gram and token-map legs
     // re-tokenize map-side; spread the single-split scan
-    val t = Tables.fanOut(Tables.documents(s, dir), s, dir, "documents",
-        rowsPerTask = 250L)
+    val t = fannedDocs(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     val grams = t.select(col("doc_id"),
       posexplode(TextAnalysis.wordNgrams(col("toks"), n))
@@ -532,7 +517,7 @@ object ScaleOps {
       .orderBy(col("dot").desc, col("vec_id"))
     val vec = emb.crossJoin(broadcast(qv2))
       .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("dot", Similarity.dotFast(s, col("query_vec"), col("qv")))
+      .withColumn("dot", Similarity.dotFast(col("query_vec"), col("qv")))
       .withColumn("vec_rank", row_number().over(wVec))
       .filter(col("vec_rank") <= 50)
       .select(col("query_id"), col("vec_id").as("doc_id"), col("vec_rank"))

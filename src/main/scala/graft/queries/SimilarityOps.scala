@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Pca, Similarity}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,8 +18,7 @@ object SimilarityOps {
     // fanOut (r12): every ANN query in this module starts here, and
     // the per-vector map work (quantize + SRP/PQ/IVF signatures)
     // otherwise serializes in the single-split scan's one task
-    Tables.fanOut(Tables.embeddings(s, dir), s, dir, "embeddings",
-        rowsPerTask = 100L)
+    Tables.fanOut(Tables.embeddings(s, dir), s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         Similarity.quantize(col("embedding")).as("query_vec"))
 
@@ -112,13 +111,13 @@ object SimilarityOps {
       .join(c.select(col("vec_id").as("query_id"), col("label").as("anchor_label")),
         "query_id")
     val c2 = c.withColumn("_n2c",
-      Similarity.dotFast(s, col("query_vec"), col("query_vec")))
+      Similarity.dotFast(col("query_vec"), col("query_vec")))
     val q2 = anchors.withColumn("_n2q",
-      Similarity.dotFast(s, col("qvec"), col("qvec")))
+      Similarity.dotFast(col("qvec"), col("qvec")))
     val scored = c2.crossJoin(broadcast(q2))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("cosine",
-        (Similarity.dotFast(s, col("query_vec"), col("qvec")).cast("double") /
+        (Similarity.dotFast(col("query_vec"), col("qvec")).cast("double") /
           sqrt(col("_n2q").cast("double") * col("_n2c").cast("double")))
           .cast("double"))
       .withColumn("role",
@@ -149,7 +148,7 @@ object SimilarityOps {
     * |labels|-row arithmetic; no driver collect, no d² matrix. */
   def q276ClassScatter(s: SparkSession, dir: String): DataFrame = {
     val base = quantized(s, dir).select(col("label"), col("query_vec"))
-      .withColumn("n2", Similarity.dotFast(s, col("query_vec"), col("query_vec")))
+      .withColumn("n2", Similarity.dotFast(col("query_vec"), col("query_vec")))
     val cells = base
       .select(col("label"), posexplode(col("query_vec")).as(Seq("pos", "x")))
       .groupBy("label", "pos").agg(sum(col("x")).as("sv"))
@@ -540,9 +539,8 @@ object SimilarityOps {
   def q185DensityOutliers(s: SparkSession, dir: String): DataFrame = {
     val c = quantized(s, dir)
     val ps = Similarity.planes(32, 64)
-    val dot = Similarity.dotFast(s, _: Column, _: Column)
     val keys = c.select(col("vec_id"),
-        posexplode(Similarity.srpBandKeys(col("query_vec"), ps, 8, 4, dot)))
+        posexplode(Similarity.srpBandKeys(col("query_vec"), ps, 8, 4, Similarity.dotFast)))
       .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
     val cand = keys
       .join(keys.select(col("vec_id").as("nb_id"), col("band"),
@@ -550,14 +548,14 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("nb_id"))
       .select("vec_id", "nb_id").distinct()
     val c2 = c.select(col("vec_id"), col("query_vec"),
-      dot(col("query_vec"), col("query_vec")).as("_n2"))
+      Similarity.dotFast(col("query_vec"), col("query_vec")).as("_n2"))
     val scored = cand
       .join(c2.select(col("vec_id"), col("query_vec").as("va"),
         col("_n2").as("n2a")), "vec_id")
       .join(c2.select(col("vec_id").as("nb_id"),
         col("query_vec").as("vb"), col("_n2").as("n2b")), "nb_id")
       .withColumn("cosine",
-        dot(col("va"), col("vb")).cast("double") /
+        Similarity.dotFast(col("va"), col("vb")).cast("double") /
           sqrt((col("n2a") * col("n2b")).cast("double")))
     val w = Window.partitionBy("vec_id")
       .orderBy(col("cosine").desc, col("nb_id"))

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** The one session factory: its settings, and that no main builds a
+/** The one session factory: its settings, that no main builds a
   * session of its own (the drift that left PipelineRun without the
-  * extensions and StreamBench without nanosAsLong). */
+  * extensions and StreamBench without nanosAsLong), and that no
+  * operator falls back when the extensions are missing. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the factory's session carries the extensions, nanosAsLong, UTC and n shuffle partitions") {
@@ -33,5 +34,8 @@ class GraftSessionSpec extends SparkSpec {
     assert(filesWith("""SparkSession\.builder""") === Seq("graft/GraftSession.scala"))
     assert(filesWith("""(new|extends)\s+[\w.]*SparkListener\b""") ===
       Seq("graft/TaskMetricsProfiler.scala"))
+    // GraftExtensions is required: no operator keeps a second code
+    // path behind a catalog lookup for sessions without it
+    assert(filesWith("""functionExists\(""") === Nil)
   }
 }

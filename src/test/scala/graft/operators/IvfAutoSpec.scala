@@ -4,11 +4,24 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** q226's auto-scaled IVF: the graft_ivf_top expression's ranking
-  * semantics, and plan-for-plan parity between the native
-  * (expression-projection) path and the compositional
-  * (greatest-tree + crossJoin-window) path it replaces. */
+  * semantics against a plain-Scala reference, the `ivfAssign` /
+  * `ivfProbes` projections built on it, and their null contract. */
 class IvfAutoSpec extends SparkSpec {
   import spark.implicits._
+
+  // Reference: score every centroid, stable-sort by (score desc,
+  // index asc), take p — the spec the insertion-sort codegen must
+  // meet, including duplicate scores and p >= k.
+  private def reference(vec: Seq[Long], book: Seq[Seq[Long]], aux: Seq[Double],
+                        p: Int, l2: Boolean): Seq[Int] =
+    book.indices
+      .map { c =>
+        val dot = vec.zip(book(c)).map { case (a, b) => a * b }.sum
+        val score = if (l2) 2.0 * dot - aux(c) else dot.toDouble / aux(c)
+        (c, score)
+      }
+      .sortBy { case (c, score) => (-score, c) }
+      .take(p).map(_._1)
 
   private def top(vec: Seq[Long], codebook: Seq[Seq[Long]],
                   norms: Seq[Double], p: Int): Seq[Int] =
@@ -60,43 +73,48 @@ class IvfAutoSpec extends SparkSpec {
     assert(topL2(Seq(0L, 0L), book, 2) === Seq(0, 1))
   }
 
-  test("L2 auto helpers match the compositional assign/probe forms") {
-    val sp = spark
+  test("ivfAssign and ivfProbes in L2 mode match the plain-Scala reference") {
     val c = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
     val q = c.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("query_id"), col("query_vec").as("qvec"))
     val numC = math.ceil(math.sqrt(c.count().toDouble)).toInt
     val cents = Similarity.ivfCentroids(c, numC)
-    val viaAuto = c.select(col("vec_id"),
-        Similarity.ivfAssignL2Auto(sp, col("query_vec"), cents).as("cid"))
+    // the reference ranks codebook indices; cid order is index order
+    val sorted = cents.sortBy(_._1)
+    val book = sorted.map(_._2.toSeq).toSeq
+    val aux = book.map(cv => cv.map(x => x * x).sum.toDouble)
+    def refCids(v: Seq[Long], p: Int): Seq[Long] =
+      reference(v, book, aux, p, l2 = true).map(i => sorted(i)._1)
+    val vecs = c.as[(Long, Seq[Long])].collect().toMap
+    val assigned = c.select(col("vec_id"),
+        Similarity.ivfAssign(col("query_vec"), cents, l2 = true).as("cid"))
       .as[(Long, Long)].collect().toMap
-    val viaExpr = c.select(col("vec_id"),
-        Similarity.ivfAssignL2Expr(sp, col("query_vec"), cents).as("cid"))
-      .as[(Long, Long)].collect().toMap
-    assert(viaAuto === viaExpr)
-    val probesAuto = Similarity.ivfProbesL2Auto(q, cents, nprobe = 4)
+    assert(assigned === vecs.map { case (id, v) => id -> refCids(v, 1).head })
+    val probes = Similarity.ivfProbes(q, cents, nprobe = 4, l2 = true)
       .select("query_id", "cid").as[(Long, Long)].collect().sorted.toSeq
-    val probesExpr = Similarity.ivfProbesL2(q, cents, nprobe = 4)
-      .select("query_id", "cid").as[(Long, Long)].collect().sorted.toSeq
-    assert(probesAuto === probesExpr)
-    assert(probesAuto.nonEmpty)
+    val want = q.as[(Long, Seq[Long])].collect()
+      .flatMap { case (id, v) => refCids(v, 4).map(id -> _) }.sorted.toSeq
+    assert(probes === want)
+    assert(probes.nonEmpty)
+  }
+
+  test("null vectors get a null cid and no probe rows, in both modes") {
+    val cents = Array(1L -> Array(1L, 0L), 2L -> Array(0L, 1L))
+    val vecs = Seq((1L, Some(Seq(3L, 1L))), (2L, None)).toDF("vec_id", "query_vec")
+    val qs = vecs.select(col("vec_id").as("query_id"), col("query_vec").as("qvec"))
+    for (l2 <- Seq(false, true)) {
+      val cids = vecs.select(col("vec_id"),
+          Similarity.ivfAssign(col("query_vec"), cents, l2).as("cid"))
+        .orderBy("vec_id").collect().map(r => Option(r.get(1))).toSeq
+      assert(cids === Seq(Some(1L), None), s"l2=$l2")
+      val probed = Similarity.ivfProbes(qs, cents, nprobe = 2, l2 = l2)
+        .select("query_id").as[Long].collect().toSeq
+      assert(probed === Seq(1L, 1L), s"l2=$l2")
+    }
   }
 
   test("property: graft_ivf_top matches a plain-Scala reference on random inputs (both modes)") {
-    // Reference: score every centroid, stable-sort by (score desc,
-    // index asc), take p — the spec the insertion-sort codegen must
-    // meet, including duplicate scores and p >= k.
-    def reference(vec: Seq[Long], book: Seq[Seq[Long]], aux: Seq[Double],
-                  p: Int, l2: Boolean): Seq[Int] =
-      book.indices
-        .map { c =>
-          val dot = vec.zip(book(c)).map { case (a, b) => a * b }.sum
-          val score = if (l2) 2.0 * dot - aux(c) else dot.toDouble / aux(c)
-          (c, score)
-        }
-        .sortBy { case (c, score) => (-score, c) }
-        .take(p).map(_._1)
     // deterministic LCG so failures replay
     var seed = 0xabcdef12L
     def next(bound: Int): Int = {
@@ -127,7 +145,7 @@ class IvfAutoSpec extends SparkSpec {
     }
   }
 
-  test("ivfTopKAuto (native projections) matches the compositional ivfTopK at sqrt(n)") {
+  test("ivfTopKAuto matches ivfTopK at a sqrt(n) codebook") {
     val c = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
     val q = c.filter(col("vec_id") % 10 === 0)

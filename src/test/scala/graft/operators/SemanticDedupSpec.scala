@@ -71,7 +71,7 @@ class SemanticDedupSpec extends SparkSpec {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
     val cents = Similarity.ivfCentroids(real, 16)
     val viaLiteral = real
-      .withColumn("cluster", Similarity.ivfAssignExpr(spark, col("query_vec"), cents))
+      .withColumn("cluster", Similarity.ivfAssign(col("query_vec"), cents))
       .select(col("vec_id"), col("cluster"))
       .as[(Long, Long)].collect().toMap
     val centTable = cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }

@@ -119,7 +119,7 @@ class SimilaritySpec extends SparkSpec {
     assert(cents.length == 8)
     val cidSet = cents.map(_._1).toSet
     val assigned = quantized
-      .withColumn("cid", Similarity.ivfAssignExpr(spark, col("query_vec"), cents))
+      .withColumn("cid", Similarity.ivfAssign(col("query_vec"), cents))
       .select("cid").as[Long].collect()
     assert(assigned.length == quantized.count())
     assert(assigned.forall(cidSet.contains))

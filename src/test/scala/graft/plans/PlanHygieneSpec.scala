@@ -38,10 +38,9 @@ class PlanHygieneSpec extends SparkSpec {
     "q49_cosine_topk" -> "broadcast query set vs corpus (exact baseline)",
     // q235 embeds q49's budgeted exact leg as the metric sheet's ideal
     "q235_retrieval_eval_auto" -> "broadcast query slice vs corpus (budgeted exact ideal)",
-    // IVF probe scoring: |Q|·k centroid cross, both sides broadcast-bounded
-    "q75_ivf_ann" -> "query x codebook probe scoring (|Q|*k rows)",
-    // (q216 probed the same broadcast codebook until round 7 routed
-    // it through the graft_ivf_top projection — no cross join left)
+    // (q75 and q216 probed a broadcast codebook by |Q|·k cross join
+    // until their probes went through the graft_ivf_top projection —
+    // no cross join left)
     // (q119/q127 probed the same broadcast codebook until round 7
     // routed their coarse stages through graft_ivf_top/_l2 —
     // no cross joins left in either plan)
