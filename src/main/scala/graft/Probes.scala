@@ -211,9 +211,8 @@ object Tier1NaturalProbe {
     val q2 = qs.withColumn("_n2q", Similarity.dotFast(col("qvec"), col("qvec")))
     val gt = c2.crossJoin(broadcast(q2))
       .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (Similarity.dotFast(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
+      .withColumn("cosine", Similarity.cosineOnNorms(col("query_vec"), col("qvec"),
+        col("_n2c"), col("_n2q")))
       .groupBy("query_id")
       .agg(call_function("graft_topk",
         floor(col("cosine") * lit(1e15)).cast("long"),

@@ -4,13 +4,14 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftListenerBridge
+import org.apache.spark.{GraftListenerBridge, SparkContext}
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Physical resource profile of a query run, summed over every task
-  * between `reset()` and `snapshot()`, with one row per stage.
+/** Physical resource profile of a query run, summed over the tasks of
+  * the jobs it submitted between `reset()` and `snapshot()`, with one
+  * row per stage.
   *
   * Wall time is a noisy scale signal (host drift, GC, neighbors —
   * the whole Bench scaladoc); BYTES are deterministic: the same plan
@@ -35,15 +36,34 @@ import org.apache.spark.sql.SparkSession
   * Each row is summed from the task-end events of its stage, so the
   * rows add up to the totals exactly; the stage's name and call site
   * arrive with its completion event.
+  *
+  * A window is scoped by JOB TAG, not by time: `reset()` tags the
+  * calling thread's jobs with a fresh tag, and a stage counts only if
+  * the job that submitted it carried the window's tag (the
+  * `spark.job.tags` property of its job-start event). The listener
+  * bus is asynchronous, so a task of an earlier job (a previous
+  * query's last rep) can end, or be delivered, after `reset()`; a time
+  * window counted it into the next query's row (23 of 280 Bench
+  * profiles differed between two identical full-suite runs).
   */
-final class TaskMetricsProfiler extends SparkListener {
+final class TaskMetricsProfiler private (sc: SparkContext) extends SparkListener {
   import TaskMetricsProfiler.{Profile, Stage}
 
   private val stages = new ConcurrentHashMap[Int, Stage]()
+  /** stage id → the window tag of the job that submitted it */
+  private val stageTags = new ConcurrentHashMap[Int, String]()
+  @volatile private var tag: String = null
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val current = tag
+    val jobTags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+    if (jobTags.exists(_.split(",").contains(current)))
+      e.stageIds.foreach(stageTags.put(_, current))
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
-    if (m != null) {
+    if (m != null && tag == stageTags.get(e.stageId)) {
       val task = Stage(e.stageId, "", "", Profile.ofTask(m))
       stages.merge(e.stageId, task, (a, b) => a.copy(metrics = a.metrics + b.metrics))
     }
@@ -56,7 +76,15 @@ final class TaskMetricsProfiler extends SparkListener {
       site = si.details.linesIterator.take(6).mkString(" | ").take(500)))
   }
 
-  def reset(): Unit = stages.clear()
+  /** Open a new window: forget the counted stages and move the
+    * calling thread's job tag to a fresh one. */
+  def reset(): Unit = {
+    Option(tag).foreach(sc.removeJobTag)
+    tag = s"graft-profile-${TaskMetricsProfiler.windows.incrementAndGet()}"
+    stageTags.clear()
+    stages.clear()
+    sc.addJobTag(tag)
+  }
 
   /** Drain the async listener bus, then read the counters. Call with
     * the action already complete; safe outside any timer. */
@@ -103,9 +131,13 @@ object TaskMetricsProfiler {
     }
   }
 
-  /** Register a profiler on the session (once per session). */
+  private val windows = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Register a profiler on the session (once per session), with its
+    * first window open on the calling thread. */
   def install(spark: SparkSession): TaskMetricsProfiler = {
-    val p = new TaskMetricsProfiler
+    val p = new TaskMetricsProfiler(spark.sparkContext)
+    p.reset()
     spark.sparkContext.addSparkListener(p)
     p
   }

@@ -194,10 +194,9 @@ object IvfIndex {
     * index uses, and its norm² `_n2c`. */
   def assignOnly(vectors: DataFrame,
                  cents: Array[(Long, Array[Long])]): DataFrame =
-    vectors
-      .withColumn("cid", Similarity.ivfAssign(col("query_vec"), cents))
-      .withColumn("_n2c",
-        Similarity.dotFast(col("query_vec"), col("query_vec")))
+    Similarity.withNorm(
+      vectors.withColumn("cid", Similarity.ivfAssign(col("query_vec"), cents)),
+      "query_vec", "_n2c")
 
   def centroids(spark: SparkSession, path: String): Array[(Long, Array[Long])] =
     spark.read.parquet(s"$path/centroids")

@@ -120,9 +120,8 @@ object SemanticDedup {
     // whole point — the quadratic term is bounded by cluster size
     val dups = a.join(b, Seq("cluster"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        (Similarity.dotFast(col("va"), col("vb")).cast("double") /
-          sqrt(col("n2a").cast("double") * col("n2b").cast("double"))).cast("double"))
+      .withColumn("cosine", Similarity.cosineOnNorms(col("va"), col("vb"),
+        col("n2b"), col("n2a")))
       .filter(col("cosine") >= tau)
       .groupBy(col("id_b").as("vec_id"))
       .agg(min(col("id_a")).as("dup_of"))

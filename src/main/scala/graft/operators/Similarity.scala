@@ -15,10 +15,22 @@ import org.apache.spark.sql.functions._
   * unambiguous. The quantization error (~1e-3 relative) is far below
   * any ranking-relevant signal at 64 dims.
   *
-  * Scale design: brute force is the per-bucket verify kernel; sign
-  * random projection LSH buckets candidates so the quadratic term is
-  * bounded by bucket size. Queries are broadcast; the corpus side
-  * never shuffles for scoring.
+  * Shape: every search is a CANDIDATE STAGE × the SHARED RE-RANK.
+  * The candidate stage decides which (query_id, vec_id) pairs are
+  * scored exactly:
+  *   - all of them (brute force, a broadcast cross join);
+  *   - shared SRP-LSH buckets ([[annTopK]]);
+  *   - probed IVF lists ([[ivfTopK]], [[ivfSearchWith]], IvfIndex);
+  *   - a compressed shortlist: PQ-ADC codes ([[pqTopK]], the IVF-PQ
+  *     pair, [[funnelTopK]]'s second stage), a head-dim prefix
+  *     ([[truncatedTopK]]) or sign-bit Hamming codes ([[binaryTopK]],
+  *     [[funnelTopK]]'s first stage).
+  * The shared parts are one per-query top-n step (rank by score, then
+  * vec_id ascending), one cosine-on-precomputed-norms expression, one
+  * ADC distance-table builder and shortlist stage, and one exact
+  * re-rank tail (cosine or integer L2, narrowed to (query_id, vec_id,
+  * score) before its window). Each entry point keeps its own join
+  * strategy (broadcast hint or sizer) and output schema.
   */
 object Similarity {
 
@@ -50,20 +62,69 @@ object Similarity {
     * dot/sqrt(n2a·n2b) double arithmetic of the oracle.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c2 = corpus.withColumn("_n2c",
-      dotFast(col("query_vec"), col("query_vec")))
-    val q2 = queries.withColumn("_n2q", dotFast(col("qvec"), col("qvec")))
-    val scored = c2.crossJoin(broadcast(q2))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dotFast(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .drop("_n2c", "_n2q")
+    val cols = corpus.columns ++ queries.columns
+    rerankTopK(withNorm(corpus, "query_vec", "_n2c")
+        .crossJoin(broadcast(withNorm(queries, "qvec", "_n2q"))).filter(notSelf),
+        k, carry = cols.filterNot(Set("query_id", "vec_id")).toSeq)
+      .select((cols :+ "cosine" :+ "rank").map(col): _*)
+  }
+
+  // ------------------------------------------------ shared re-rank
+
+  /** Cosine from the exact integer dot of corpus vector `cv` and query
+    * vector `qv` over their precomputed norms² — the oracle's
+    * dot/sqrt(n2q·n2c) double arithmetic, one copy for every scorer. */
+  private[graft] def cosineOnNorms(cv: Column, qv: Column, n2c: Column,
+                                   n2q: Column): Column =
+    (dotFast(cv, qv).cast("double") /
+      sqrt(n2q.cast("double") * n2c.cast("double"))).cast("double")
+
+  /** `df` with the exact integer norm² of its vector column `vec` as `n2`. */
+  private[operators] def withNorm(df: DataFrame, vec: String, n2: String): DataFrame =
+    df.withColumn(n2, dotFast(col(vec), col(vec)))
+
+  /** Self pairs never rank: a query is a corpus slice. */
+  private val notSelf: Column = col("query_id") =!= col("vec_id")
+
+  /** The per-query top-n step every ranked stage ends in: `rank` by
+    * `score`, then vec_id ascending (the family's one tie-break),
+    * within each query_id; keep rank ≤ n. A rank ≤ n filter over
+    * row_number plans as WindowGroupLimit, a map-side partial top-n
+    * under the window exchange. */
+  private def topN(df: DataFrame, n: Int, score: Column): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(score, col("vec_id").asc)))
+      .filter(col("rank") <= n)
+
+  /** Candidate (query_id, vec_id, …) rows with both full vectors and
+    * their norms² fetched by equi-join: the corpus side by vec_id, the
+    * (bounded) query side broadcast. */
+  private def fetch(cands: DataFrame, corpus: DataFrame,
+                    queries: DataFrame): DataFrame =
+    cands
+      .join(withNorm(corpus.select("vec_id", "query_vec"), "query_vec", "_n2c"), "vec_id")
+      .join(broadcast(withNorm(queries.select("query_id", "qvec"), "qvec", "_n2q")),
+        "query_id")
+
+  /** The exact re-rank tail every entry point ends in. `pairs` carry
+    * query_vec/_n2c and qvec/_n2q; each is scored by exact cosine, or
+    * by integer-exact L2 (‖c‖² − 2c·q + ‖q‖², a BIGINT) when `l2`,
+    * then narrowed to (query_id, vec_id, score, carry…) BEFORE the
+    * rank window, so its partial top-k sorts ~30 B rows instead of
+    * rows carrying two 64-long vectors (at sf100 the wide sort spilled
+    * 17 GB); `place` repartitions those narrow rows for the window
+    * (annTopK's query_id sizer). Output: (query_id, rank, vec_id,
+    * cosine | l2_dist, carry…), the k best per query. */
+  private def rerankTopK(pairs: DataFrame, k: Int, l2: Boolean = false,
+                         carry: Seq[String] = Nil,
+                         place: DataFrame => DataFrame = identity): DataFrame = {
+    val (score, by) =
+      if (l2) ("l2_dist", col("_n2c") - lit(2L) * dotFast(col("query_vec"), col("qvec")) + col("_n2q"))
+      else ("cosine", cosineOnNorms(col("query_vec"), col("qvec"), col("_n2c"), col("_n2q")))
+    val narrow = pairs.withColumn(score, by)
+      .select((Seq("query_id", "vec_id", score) ++ carry).map(col): _*)
+    topN(place(narrow), k, if (l2) col(score).asc else col(score).desc)
+      .select((Seq("query_id", "rank", "vec_id", score) ++ carry).map(col): _*)
   }
 
   /** Deterministic ±1 hyperplanes for sign-random-projection LSH,
@@ -329,29 +390,15 @@ object Similarity {
       (l, p) => sized(l).join(sized(p), "cid"))
   }
 
-  /** The probed re-rank tail of the IVF family ([[ivfTopK]],
+  /** The probed candidate stage of the IVF family ([[ivfTopK]],
     * [[ivfSearchWith]], IvfIndex.topK): `join` pairs the inverted
-    * lists (IvfIndex.assignOnly's rows) with the probe rows, each
-    * caller keeping its own join strategy; then self pairs drop, the
-    * exact cosine is scored, and the rows narrow to (query_id,
-    * vec_id, cosine) BEFORE the rank window, so its partial top-k
-    * sorts ~30 B rows instead of rows carrying two 64-long vectors
-    * (at sf100 the wide sort spilled 17 GB); per-query top-k by
-    * (cosine desc, vec_id). */
+    * lists (IvfIndex.assignOnly's rows, which already carry the
+    * vectors and _n2c) with the probe rows, each caller keeping its
+    * own join strategy; self pairs drop, then the shared exact-cosine
+    * tail ranks. */
   private[operators] def probedTopK(lists: DataFrame, probes: DataFrame, k: Int)(
-      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    join(lists, probes.withColumn("_n2q", dotFast(col("qvec"), col("qvec"))))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dotFast(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-  }
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    rerankTopK(join(lists, withNorm(probes, "qvec", "_n2q")).filter(notSelf), k)
 
   // -------------------------------------------------------------- PQ
 
@@ -368,11 +415,16 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val subDim = dim / m
     val picked = ivfCentroids(corpus, ks) // md5-ordered: index == code
+    codebook(m, ks)((j, k) => picked(k)._2.slice(j * subDim, (j + 1) * subDim))
+  }
+
+  /** m×ks sub-codebook entries (subvector, |c|²) from `entry(j, k)`. */
+  private def codebook(m: Int, ks: Int)(
+      entry: (Int, Int) => Array[Long]): Array[Array[(Array[Long], Long)]] =
     Array.tabulate(m, ks) { (j, k) =>
-      val cv = picked(k)._2.slice(j * subDim, (j + 1) * subDim)
+      val cv = entry(j, k)
       (cv, cv.map(x => x * x).sum)
     }
-  }
 
   /** PQ-ADC shortlist + exact re-rank (the production IVF-PQ serving
     * shape): encode the corpus to m small codes (argmin ‖x_j − c‖²
@@ -409,28 +461,18 @@ object Similarity {
   def pqTopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
                  sub: Array[Array[(Array[Long], Long)]], m: Int, dim: Int,
                  shortlist: Int): DataFrame =
-    exactL2Rerank(pqShortlist(corpus, queries, sub, m, dim / m, shortlist),
-      corpus, queries, k)
+    adcRerank(pqCoded(corpus, sub, dim / m)
+      .crossJoin(broadcast(queryTables(queries, sub, dim / m))).filter(notSelf),
+      corpus, queries, k, m, shortlist)
 
-  /** Exact-L2 re-rank of an (query_id, vec_id, approx_dist)
-    * candidate set: fetch full vectors for candidates only, keep the
-    * k best per query by integer-exact L2. */
-  private def exactL2Rerank(cands: DataFrame, corpus: DataFrame,
-                            queries: DataFrame, k: Int): DataFrame = {
-    val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dotFast(col("query_vec"), col("query_vec")).as("_n2c"))
-    val q2 = queries.select(col("query_id"), col("qvec"),
-      dotFast(col("qvec"), col("qvec")).as("_n2q"))
-    val we = Window.partitionBy("query_id")
-      .orderBy(col("l2_dist").asc, col("vec_id").asc)
-    cands.join(c2, "vec_id").join(broadcast(q2), "query_id")
-      .withColumn("l2_dist",
-        col("_n2c") - lit(2L) * dotFast(col("query_vec"), col("qvec")) + col("_n2q"))
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        col("l2_dist"), col("approx_dist"))
-  }
+  /** The ADC → exact-L2 serving tail of the PQ family: `pairs` carry
+    * m codes c0.. and m distance tables dt0..; keep the `shortlist`
+    * best by ADC distance, then re-rank those by integer-exact L2.
+    * Output (query_id, rank, vec_id, l2_dist, approx_dist). */
+  private def adcRerank(pairs: DataFrame, corpus: DataFrame, queries: DataFrame,
+                        k: Int, m: Int, shortlist: Int): DataFrame =
+    rerankTopK(fetch(adcShortlist(pairs, m, shortlist), corpus, queries), k,
+      l2 = true, carry = Seq("approx_dist"))
 
   /** IVF-PQ: the canonical web-scale ANN index (FAISS "IVFx,PQy") —
     * a coarse quantizer prunes the scan to nprobe of numCentroids
@@ -451,23 +493,13 @@ object Similarity {
     val subDim = dim / m
     val cents = ivfCentroids(corpus, numCentroids)
     val sub = pqCodebooks(corpus, ks, m, dim)
-    val coded = corpus.select(
-      col("vec_id") +:
-        ivfAssign(col("query_vec"), cents).as("cid") +:
-        (0 until m).map(j =>
-          pqCodeExpr(col("query_vec"), sub, subDim, j).as(s"c$j")): _*)
+    val coded = corpus.select(col("vec_id") +:
+      ivfAssign(col("query_vec"), cents).as("cid") +: pqCodes(col("query_vec"), sub, subDim): _*)
     val probeTables = ivfProbes(queries, cents, nprobe)
       .select("query_id", "cid")
-      .join(pqQueryTables(queries, sub, m, subDim), "query_id")
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("approx_dist").asc, col("vec_id").asc)
-    val cands = coded.join(broadcast(probeTables), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("approx_dist", adcDist(m))
-      .withColumn("_arank", row_number().over(wa))
-      .filter(col("_arank") <= shortlist)
-      .select("query_id", "vec_id", "approx_dist")
-    exactL2Rerank(cands, corpus, queries, k)
+      .join(queryTables(queries, sub, subDim), "query_id")
+    adcRerank(coded.join(broadcast(probeTables), "cid").filter(notSelf),
+      corpus, queries, k, m, shortlist)
   }
 
   /** IVF-PQ on RESIDUALS — the canonical FAISS IVFADC form of
@@ -564,27 +596,13 @@ object Similarity {
       .orderBy(md5(concat(lit("r"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(ks).select("rvec").collect()
       .map(_.getSeq[Long](0).toArray)
-    val sub = Array.tabulate(m, ks) { (j, kk) =>
-      val cv = pickedRes(kk).slice(j * subDim, (j + 1) * subDim)
-      (cv, cv.map(x => x * x).sum)
-    }
-    val coded = res.select(
-      col("vec_id") +: col("cid") +:
-        (0 until m).map(j => pqCodeExpr(col("rvec"), sub, subDim, j).as(s"c$j")): _*)
+    val sub = codebook(m, ks)((j, kk) => pickedRes(kk).slice(j * subDim, (j + 1) * subDim))
+    val coded = res.select(col("vec_id") +: col("cid") +: pqCodes(col("rvec"), sub, subDim): _*)
     // per-(query, probed list) residual query → per-pair ADC tables
-    def distTable(j: Int): Column = {
-      val qj = slice(col("rqvec"), j * subDim + 1, subDim)
-      transform(pqCbLit(sub, j), e =>
-        (dotQ(qj, qj) - lit(2L) * dotQ(qj, e.getField("cv")) +
-          e.getField("n")).cast("long"))
-    }
     val probeTables = ivfProbes(queries, cents, nprobe, l2 = true)
       .join(broadcast(centDf), "cid")
       .withColumn("rqvec", zip_with(col("qvec"), col("cvec"), (a, b) => a - b))
-      .select(col("query_id") +: col("cid") +:
-        (0 until m).map(j => distTable(j).as(s"dt$j")): _*)
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("approx_dist").asc, col("vec_id").asc)
+      .select(col("query_id") +: col("cid") +: adcTables(col("rqvec"), sub, subDim): _*)
     // Same candidate-frame discipline as ivfSearchWith (r10 sf100
     // find, measured there as a 10.5 GB partial-sort spill on this
     // path): on the auto (no-broadcast) route, gated two-sided cid
@@ -600,58 +618,47 @@ object Similarity {
         val sized = graft.queries.ExplodedJoin.sizer(sp, est, col("cid"))
         sized(coded).join(sized(probeTables), Seq("cid"))
       }
-    val cands = joined
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("approx_dist", adcDist(m))
-      .select("query_id", "vec_id", "approx_dist")
-      .withColumn("_arank", row_number().over(wa))
-      .filter(col("_arank") <= shortlist)
-      .select("query_id", "vec_id", "approx_dist")
-    exactL2Rerank(cands, corpus, queries, k)
+    adcRerank(joined.filter(notSelf), corpus, queries, k, m, shortlist)
   }
 
   /** Corpus side of the ADC scan: each vector reduced to its m codes. */
-  private def pqCoded(corpus: DataFrame,
-                      sub: Array[Array[(Array[Long], Long)]], m: Int,
+  private def pqCoded(corpus: DataFrame, sub: Array[Array[(Array[Long], Long)]],
                       subDim: Int): DataFrame =
-    corpus.select(
-      col("vec_id") +: (0 until m).map(j =>
-        pqCodeExpr(col("query_vec"), sub, subDim, j).as(s"c$j")): _*)
+    corpus.select(col("vec_id") +: pqCodes(col("query_vec"), sub, subDim): _*)
 
-  /** Query side of the ADC scan: per-query m×ks exact distance
-    * tables, one array column per subspace (broadcast by callers). */
-  private def pqQueryTables(queries: DataFrame,
-                            sub: Array[Array[(Array[Long], Long)]], m: Int,
-                            subDim: Int): DataFrame = {
-    def distTable(vec: Column, j: Int): Column = {
-      val qj = slice(vec, j * subDim + 1, subDim)
+  /** `vec`'s m PQ codes as columns c0..c{m-1}. */
+  private def pqCodes(vec: Column, sub: Array[Array[(Array[Long], Long)]],
+                      subDim: Int): Seq[Column] =
+    sub.indices.map(j => pqCodeExpr(vec, sub, subDim, j).as(s"c$j"))
+
+  /** The one ADC distance-table builder: for query vector `q`, one
+    * ks-entry exact ‖q_j − c‖² array per subspace, as dt0..dt{m-1}.
+    * `q` is the raw query, or the residual q − c_cid per probed list. */
+  private def adcTables(q: Column, sub: Array[Array[(Array[Long], Long)]],
+                        subDim: Int): Seq[Column] =
+    sub.indices.map { j =>
+      val qj = slice(q, j * subDim + 1, subDim)
       transform(pqCbLit(sub, j), e =>
         (dotQ(qj, qj) - lit(2L) * dotQ(qj, e.getField("cv")) +
-          e.getField("n")).cast("long"))
+          e.getField("n")).cast("long")).as(s"dt$j")
     }
-    queries.select(
-      col("query_id") +: (0 until m).map(j => distTable(col("qvec"), j).as(s"dt$j")): _*)
-  }
 
-  /** Sum of the m ADC table lookups for one (query, code-row) pair. */
-  private def adcDist(m: Int): Column =
-    (0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j") + 1)).reduce(_ + _)
+  /** Query side of the ADC scan: per-query distance tables (broadcast
+    * by callers). */
+  private def queryTables(queries: DataFrame, sub: Array[Array[(Array[Long], Long)]],
+                          subDim: Int): DataFrame =
+    queries.select(col("query_id") +: adcTables(col("qvec"), sub, subDim): _*)
 
-  /** The ADC shortlist stage shared by the PQ entry points: encode
-    * the corpus, broadcast per-query distance tables, keep the
-    * `shortlist` best (approx_dist, vec_id) per query. */
-  private def pqShortlist(corpus: DataFrame, queries: DataFrame,
-                          sub: Array[Array[(Array[Long], Long)]], m: Int,
-                          subDim: Int, shortlist: Int): DataFrame = {
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("approx_dist").asc, col("vec_id").asc)
-    pqCoded(corpus, sub, m, subDim)
-      .crossJoin(broadcast(pqQueryTables(queries, sub, m, subDim)))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("approx_dist", adcDist(m))
-      .withColumn("_arank", row_number().over(wa))
-      .filter(col("_arank") <= shortlist)
-      .select("query_id", "vec_id", "approx_dist")
+  /** The one ADC shortlist stage: `pairs` carry m codes and m tables;
+    * approx_dist is the sum of the m table lookups, and the rows
+    * narrow to (query_id, vec_id, approx_dist, carry…) before the
+    * per-query top-`n` by (approx_dist, vec_id). */
+  private def adcShortlist(pairs: DataFrame, m: Int, n: Int,
+                           carry: Seq[String] = Nil): DataFrame = {
+    val out = (Seq("query_id", "vec_id", "approx_dist") ++ carry).map(col)
+    val adc = (0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j") + 1)).reduce(_ + _)
+    topN(pairs.withColumn("approx_dist", adc).select(out: _*), n, col("approx_dist").asc)
+      .select(out: _*)
   }
 
   /** Truncated-dimension shortlist + exact re-rank (the
@@ -671,23 +678,15 @@ object Similarity {
     // real score in a descending window — flooding the shortlist.
     // Zero-head vectors are legitimately unrankable by the head
     // stage, so they are excluded (mirrored in the q103 oracle).
-    val ch = corpus.select(col("vec_id"), slice(col("query_vec"), 1, headDim).as("hv"))
-      .withColumn("_n2h", dotFast(col("hv"), col("hv")))
-      .filter(col("_n2h") > 0)
-    val qh = queries.select(col("query_id"), slice(col("qvec"), 1, headDim).as("qh"))
-      .withColumn("_n2qh", dotFast(col("qh"), col("qh")))
-      .filter(col("_n2qh") > 0)
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("head_cosine").desc, col("vec_id").asc)
-    val cands = ch.crossJoin(broadcast(qh))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("head_cosine",
-        (dotFast(col("hv"), col("qh")).cast("double") /
-          sqrt(col("_n2qh").cast("double") * col("_n2h").cast("double"))).cast("double"))
-      .withColumn("_hrank", row_number().over(wa))
-      .filter(col("_hrank") <= shortlist)
+    val ch = withNorm(corpus.select(col("vec_id"), slice(col("query_vec"), 1, headDim).as("hv")),
+      "hv", "_n2h").filter(col("_n2h") > 0)
+    val qh = withNorm(queries.select(col("query_id"), slice(col("qvec"), 1, headDim).as("qh")),
+      "qh", "_n2qh").filter(col("_n2qh") > 0)
+    val cands = topN(ch.crossJoin(broadcast(qh)).filter(notSelf).withColumn("head_cosine",
+        cosineOnNorms(col("hv"), col("qh"), col("_n2h"), col("_n2qh"))),
+        shortlist, col("head_cosine").desc)
       .select("query_id", "vec_id", "head_cosine")
-    exactCosineRerank(cands, corpus, queries, k, carry = Seq("head_cosine"))
+    rerankTopK(fetch(cands, corpus, queries), k, carry = Seq("head_cosine"))
   }
 
   /** The per-subspace codebook as ONE array-of-structs literal,
@@ -743,10 +742,8 @@ object Similarity {
           .sortBy(_._1)
         jc -> byPos.map { case (_, s, n) => math.round(s.toDouble / n) }.toArray
       }
-    Array.tabulate(m, sub(0).length) { (j, kk) =>
-      val cv = stats.getOrElse((j, kk), sub(j)(kk)._1) // empty entry: keep
-      (cv, cv.map(x => x * x).sum)
-    }
+    codebook(m, sub(0).length)((j, kk) =>
+      stats.getOrElse((j, kk), sub(j)(kk)._1)) // empty entry: keep
   }
 
   /** Binary (1-bit) quantization + Hamming shortlist + exact re-rank:
@@ -776,22 +773,18 @@ object Similarity {
     val qcoded = queries.select(col("query_id"),
       binaryCode(col("qvec"), 0).as("q0"),
       binaryCode(col("qvec"), 1).as("q1"))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("vec_id").asc)
-    coded.crossJoin(broadcast(qcoded))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("hamming",
-        (bit_count(col("b0").bitwiseXOR(col("q0"))) +
-          bit_count(col("b1").bitwiseXOR(col("q1")))).cast("long"))
-      .withColumn("_hrank", row_number().over(wa))
-      .filter(col("_hrank") <= shortlist)
+    topN(coded.crossJoin(broadcast(qcoded)).filter(notSelf)
+        .withColumn("hamming",
+          (bit_count(col("b0").bitwiseXOR(col("q0"))) +
+            bit_count(col("b1").bitwiseXOR(col("q1")))).cast("long")),
+        shortlist, col("hamming").asc)
       .select("query_id", "vec_id", "hamming")
   }
 
   def binaryTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                  shortlist: Int): DataFrame =
-    exactCosineRerank(hammingCandidates(corpus, queries, shortlist),
-      corpus, queries, k, carry = Seq("hamming"))
+    rerankTopK(fetch(hammingCandidates(corpus, queries, shortlist), corpus, queries),
+      k, carry = Seq("hamming"))
 
   /** Three-stage compressed funnel — the recall upgrade over either
     * compressed path alone at the SAME exact-stage budget:
@@ -823,42 +816,12 @@ object Similarity {
                      sub: Array[Array[(Array[Long], Long)]], m: Int, dim: Int,
                      hammingShortlist: Int, rerank: Int): DataFrame = {
     val subDim = dim / m
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("approx_dist").asc, col("vec_id").asc)
-    val rescored = hammingCandidates(corpus, queries, hammingShortlist)
-      .join(pqCoded(corpus, sub, m, subDim), "vec_id")
-      .join(broadcast(pqQueryTables(queries, sub, m, subDim)), "query_id")
-      .withColumn("approx_dist", adcDist(m))
-      .withColumn("_arank", row_number().over(wa))
-      .filter(col("_arank") <= rerank)
-      .select("query_id", "vec_id", "hamming", "approx_dist")
-    exactCosineRerank(rescored, corpus, queries, k,
+    val rescored = adcShortlist(hammingCandidates(corpus, queries, hammingShortlist)
+      .join(pqCoded(corpus, sub, subDim), "vec_id")
+      .join(broadcast(queryTables(queries, sub, subDim)), "query_id"),
+      m, rerank, carry = Seq("hamming"))
+    rerankTopK(fetch(rescored, corpus, queries), k,
       carry = Seq("hamming", "approx_dist"))
-  }
-
-  /** Shared exact-cosine re-rank tail for two-stage ANN serving:
-    * fetch full vectors for candidate (query_id, vec_id) rows by
-    * equi-join, score the exact cosine, keep the per-query top-k.
-    * One copy of the cosine formula + tie-break window so the ANN
-    * variants cannot silently diverge. `carry` columns from the
-    * candidate stage ride along into the output. */
-  def exactCosineRerank(cands: DataFrame, corpus: DataFrame,
-                        queries: DataFrame, k: Int,
-                        carry: Seq[String] = Nil): DataFrame = {
-    val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dotFast(col("query_vec"), col("query_vec")).as("_n2c"))
-    val q2 = queries.select(col("query_id"), col("qvec"),
-      dotFast(col("qvec"), col("qvec")).as("_n2q"))
-    val we = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    cands.join(c2, "vec_id").join(broadcast(q2), "query_id")
-      .withColumn("cosine",
-        (dotFast(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
-      .select((Seq("query_id", "rank", "vec_id", "cosine") ++ carry)
-        .map(col): _*)
   }
 
   /** LSH-bucketed ANN: multi-table sign-random-projection — bucket
@@ -915,12 +878,12 @@ object Similarity {
     // sizer; identity below the gate keeps small-scale plans
     // untouched. estCandidates < 0 (the fixed-resolution callers
     // q50/q80) sizes nothing.
-    val sizedQ = if (estCandidates >= 0L)
-      graft.queries.ExplodedJoin.sizer(sp, estCandidates, col("query_id"))
-    else identity[DataFrame] _
-    val sizedV = if (estCandidates >= 0L)
-      graft.queries.ExplodedJoin.sizer(sp, estCandidates, col("vec_id"))
-    else identity[DataFrame] _
+    def sized(keys: String*): DataFrame => DataFrame =
+      if (estCandidates >= 0L)
+        graft.queries.ExplodedJoin.sizer(sp, estCandidates, keys.map(col): _*)
+      else identity
+    val sizedQ = sized("query_id")
+    val sizedV = sized("vec_id")
     val flipsSeq: Seq[Long] = 0L +: (0 until multiProbe).map(1L << _).map(_.toLong)
     val bandC = corpus
       .select(col("vec_id"), srpBandKeys(col("query_vec"), ps, bands, bitsPerBand, dotFast).as("_vkeys"))
@@ -950,9 +913,7 @@ object Similarity {
     // so the join adds no third exchange. The strategy choice shares
     // the sizers' own gate predicate (ExplodedJoin.gateOpen) so the
     // two can never silently diverge (round-11 advice).
-    val sizedB = if (estCandidates >= 0L)
-      graft.queries.ExplodedJoin.sizer(sp, estCandidates, col("band"), col("bkey"))
-    else identity[DataFrame] _
+    val sizedB = sized("band", "bkey")
     val bucketJoined = {
       val gate = estCandidates >= 0L &&
         graft.queries.ExplodedJoin.gateOpen(sp, estCandidates)
@@ -966,17 +927,10 @@ object Similarity {
     val isMatch = transform(diffs, d => flipsSeq.map(f => d === lit(f)).reduce(_ || _))
     val candIds = bucketJoined
       .filter(array_position(isMatch, true) === col("band") + 1)
-      .filter(col("query_id") =!= col("vec_id"))
+      .filter(notSelf)
       .select("query_id", "vec_id")
-    val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dotFast(col("query_vec"), col("query_vec")).as("_n2c"))
-    val q2 = queries.select(col("query_id"), col("qvec"),
-      dotFast(col("qvec"), col("qvec")).as("_n2q"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val cosine =
-      (dotFast(col("query_vec"), col("qvec")).cast("double") /
-        sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double")
+    val c2 = withNorm(corpus.select("vec_id", "query_vec"), "query_vec", "_n2c")
+    val q2 = withNorm(queries.select("query_id", "qvec"), "qvec", "_n2q")
     // NARROW pair rows re-attach the corpus vectors by vec_id (both
     // sides share the vec_id sizer — equal partition counts
     // co-partition, see ExplodedJoin scaladoc), then the query
@@ -987,18 +941,12 @@ object Similarity {
     val withCorpusVec = sizedV(candIds).join(sizedV(c2), "vec_id")
     val qBroadcastOk = estQueries < 0L ||
       estQueries * QueryRowBytes <= QueryBroadcastBudget
-    val scored =
-      if (qBroadcastOk)
-        sizedQ(withCorpusVec.join(broadcast(q2), "query_id")
-          .withColumn("cosine", cosine)
-          .select(col("query_id"), col("vec_id"), col("cosine")))
-      else
-        sizedQ(withCorpusVec).join(sizedQ(q2), "query_id")
-          .withColumn("cosine", cosine)
-          .select(col("query_id"), col("vec_id"), col("cosine"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    if (qBroadcastOk)
+      rerankTopK(withCorpusVec.join(broadcast(q2), "query_id"), k, place = sizedQ)
+        .select("query_id", "vec_id", "cosine", "rank")
+    else
+      rerankTopK(sizedQ(withCorpusVec).join(sizedQ(q2), "query_id"), k)
+        .select("query_id", "vec_id", "cosine", "rank")
   }
 
   /** ~bytes per broadcast query row (id + 64 quantized longs + norm +

@@ -129,14 +129,7 @@ object SessionizeOp {
       !k.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
       !k.dataType.isInstanceOf[org.apache.spark.sql.types.MapType],
       s"sessionize key must be an atomic type, got ${k.dataType.sql}")
-    // keep working on sessions built WITHOUT the graft extensions
-    // (e.g. the driver's bare session): extraStrategies is the public
-    // per-session registration point
-    val ss = df.sparkSession
-    if (!ss.experimental.extraStrategies.contains(SessionizeStrategy))
-      ss.experimental.extraStrategies =
-        ss.experimental.extraStrategies :+ SessionizeStrategy
-    GraftSqlBridge.ofRows(ss,
+    GraftSqlBridge.ofRows(df.sparkSession,
       Sessionize(analyzed, k, attr(tsCol), gapSeconds * 1000000L))
   }
 }

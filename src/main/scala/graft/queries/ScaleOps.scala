@@ -17,13 +17,7 @@ object ScaleOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def quantized(s: SparkSession, dir: String): DataFrame =
-    // fanOut (r12): shared source of this module's ANN queries — the
-    // per-vector quantize/codebook/signature map work otherwise runs
-    // in the single-split scan's one task
-    Tables.fanOut(Tables.embeddings(s, dir), s, dir, "embeddings")
-      .select(col("vec_id"),
-        Similarity.quantize(col("embedding")).as("query_vec"))
+  import SimilarityOps.quantized
 
   /** Bloom-literal ceiling for q98: at the default fpp (0.03, ~7.3
     * bits/key) 1M keys is ~0.9 MB of literal bits in every task's

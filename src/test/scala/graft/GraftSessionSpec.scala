@@ -35,7 +35,9 @@ class GraftSessionSpec extends SparkSpec {
     assert(filesWith("""(new|extends)\s+[\w.]*SparkListener\b""") ===
       Seq("graft/TaskMetricsProfiler.scala"))
     // GraftExtensions is required: no operator keeps a second code
-    // path behind a catalog lookup for sessions without it
+    // path behind a catalog lookup, or registers its own strategy,
+    // for sessions without it
     assert(filesWith("""functionExists\(""") === Nil)
+    assert(filesWith("""extraStrategies""") === Nil)
   }
 }

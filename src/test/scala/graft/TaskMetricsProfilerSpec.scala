@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import org.apache.spark.sql.functions._
 
 class TaskMetricsProfilerSpec extends SparkSpec {
+  import TaskMetricsProfilerSpec.Gate
 
   test("captures shuffle + input bytes for a profiled window; reset re-arms") {
     val p = TaskMetricsProfiler.install(spark)
@@ -71,5 +74,35 @@ class TaskMetricsProfilerSpec extends SparkSpec {
 
     p.reset()
     assert(p.snapshot(spark).stages.isEmpty)
+  }
+
+  test("a straggler task of an earlier, untagged job that ends inside the window is not counted") {
+    val p = TaskMetricsProfiler.install(spark)
+    // the earlier job: one task, held open until the window is running
+    val straggler = new Thread(() => {
+      spark.sparkContext.clearJobTags()
+      spark.range(0, 1, 1, 1).foreach { _ =>
+        Gate.started.countDown()
+        Gate.release.await(60, TimeUnit.SECONDS)
+        ()
+      }
+    })
+    straggler.start()
+    assert(Gate.started.await(60, TimeUnit.SECONDS), "straggler task never started")
+    p.reset()
+    spark.range(0, 100, 1, 2).foreach(_ => ())
+    Gate.release.countDown()
+    straggler.join(60000)
+    val s = p.snapshot(spark)
+    assert(s.tasks === 2L, s"window counted a task it did not submit: ${s.stages.map(_.json)}")
+    assert(s.stages.size === 1)
+  }
+}
+
+object TaskMetricsProfilerSpec {
+  /** Latches a task can reach: executors run in this JVM (local mode). */
+  object Gate {
+    val started = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
   }
 }
