@@ -182,7 +182,6 @@ object Tier1NaturalProbe {
       ScaleUp.scaleEmbeddings(Tables.embeddings(spark, src), 10)
         .write.mode(SaveMode.Overwrite).parquet(s"$out/embeddings.parquet")
       java.nio.file.Files.writeString(marker, s"src=$src replicas=10\n")
-      Tables.invalidateStamps()
     }
 
     // each leg's bytes come from its own reset/snapshot window

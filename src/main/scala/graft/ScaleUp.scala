@@ -77,9 +77,6 @@ object ScaleUp {
         .write.mode(SaveMode.Overwrite).parquet(s"$out/$t.parquet")
     // stamped last: presence certifies every table above landed
     java.nio.file.Files.writeString(marker, s"replicas=$replicas src=$src\n")
-    // new data epoch: cached file stamps (hence row-count memos) over
-    // any regenerated dir must re-list on next use
-    Tables.invalidateStamps()
   }
 
   /** 10 replicas of documents; text perturbed per (replica, doc,

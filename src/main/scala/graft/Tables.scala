@@ -19,9 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * schema is a Spark job, and a query composed over unchanged tables
   * should not pay one per table. An entry is
   * valid only for the exact file listing it was inferred from — a
-  * fresh (name, length, mtime) listing on every read, never the
-  * per-tick [[fileStamp]]: a stale row count only mis-sizes a
-  * partition, but a stale schema is a wrong answer. Spark's part-file
+  * fresh (name, length, mtime) listing on every read, which also
+  * validates the row-count memo ([[rowCount]]). Spark's part-file
   * names carry a per-job UUID, so any rewrite of a directory changes
   * its listing, and the next read infers again. The entry also
   * carries the session confs that change how a footer converts to a
@@ -125,53 +124,21 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
   /** Session-scoped memo of a table's row count, keyed by (path, file
-    * stamp) — the directionCache idiom (SimilarityOps). The sizing
-    * paths (ExplodedJoin gates, auto-IVF candidate estimates) need a
-    * row-count BOUND, and while a bare parquet count() is
+    * listing stamp) — the directionCache idiom (SimilarityOps). The
+    * sizing paths (ExplodedJoin gates, auto-IVF candidate estimates)
+    * need a row-count BOUND, and while a bare parquet count() is
     * metadata-cheap it is not free: it schedules a real Spark job per
     * call, and the gram family + auto-ANN family each paid one per
     * query composition (measured +0.4-1.0 s each at sf0.1, round-10
-    * verdict item 1). One count per (dir, table) per JVM amortizes
-    * that to zero on every re-composition; the file stamp (an
-    * order-independent (name, len, mtime) hash — metadata listing
-    * only, no job) invalidates the memo when a sweep/test session
-    * regenerates the same dir, so a stale bound can never under-size
-    * a partition gate. At most one entry per path survives (the value
-    * carries its stamp and is replaced on mismatch). */
+    * verdict item 1). One count per table listing amortizes that to
+    * zero on every re-composition. The entry is validated by the same
+    * fresh (name, length, mtime) listing the schema memo takes on
+    * every read, so a directory rewritten by any writer is recounted
+    * and a stale bound can never under-size a partition gate. At most
+    * one entry per path survives (the value carries its stamp and is
+    * replaced on mismatch). */
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-  /** The file stamp itself is memoized per (path, LOGICAL TICK): the
-    * recursive listing that validates the count memo is free on a
-    * local FS but is one LIST call per query composition on an
-    * object store — an s3a deployment would pay a listing storm
-    * (round-11 verdict nit). Within one tick a table dir is assumed
-    * immutable (the same assumption every query plan already makes
-    * between analysis and execution); any graft writer that rewrites
-    * a table dir bumps the tick ([[invalidateStamps]] — ScaleUp
-    * .writeAll does, and tests that regenerate fixtures must), which
-    * drops every cached stamp at once. So: at most ONE listing per
-    * dir per tick (spec'd by RowCountMemoSpec via [[stampListings]]),
-    * and a regenerated dir still invalidates the count memo the
-    * moment its writer announces the new epoch. */
-  private val stampCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-  private val stampTick = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val stampListings = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Announce a new data epoch: every cached file stamp is
-    * re-listed on next use. Call after rewriting any table dir. */
-  def invalidateStamps(): Unit = stampTick.incrementAndGet()
-
-  private def fileStamp(s: SparkSession, path: String): Long = {
-    val tick = stampTick.get()
-    stampCache.compute(path, (_, cur) =>
-      if (cur != null && cur._1 == tick) cur
-      else {
-        stampListings.incrementAndGet()
-        (tick, listStamp(s, path))
-      })._2
-  }
 
   /** Order-independent hash of (name, length, mtime) over the files
     * under `path`; -1 when it does not exist. */
@@ -195,10 +162,12 @@ object Tables {
   }
 
   /** Memoized `count()` of a driver-generated table — use for sizing
-    * estimates, never for query output (outputs must stay lazy). */
+    * estimates, never for query output (outputs must stay lazy). The
+    * listing is taken BEFORE the count, so a directory rewritten in
+    * between is stored under the old stamp and recounted next time. */
   def rowCount(s: SparkSession, dir: String, name: String): Long = {
     val path = s"$dir/$name.parquet"
-    val stamp = fileStamp(s, path)
+    val stamp = listStamp(s, path)
     countCache.compute(path, (_, cur) =>
       if (cur != null && cur._1 == stamp) cur
       else (stamp, load(s, dir, name).count()))._2
@@ -207,91 +176,6 @@ object Tables {
   /** The documents-table bound every gram-family sizer keys on. */
   def documentCount(s: SparkSession, dir: String): Long =
     rowCount(s, dir, "documents")
-
-  /** Fan a SINGLE-SPLIT scan out across idle cores before an
-    * expensive per-row projection (optimization guide §2.5 "input
-    * skew": one small/unsplittable input file gives the whole scan
-    * ONE task, and every map-side expression — md5 ladders, tokenize
-    * + n-gram HOFs, decimal aggregation partials — serializes on one
-    * core no matter how many the session has; measured round 12:
-    * q165's 40×-replicated md5 leg ran 4.25 s in one task at
-    * local[32]).
-    *
-    * The gate is derived from INPUT SIZE, not the local core count:
-    * the natural split count is ceil(file bytes / maxPartitionBytes).
-    * When that already reaches the session's parallelism (any real
-    * multi-file/100 TB table), this is the IDENTITY — no exchange is
-    * added and the scan's own parallelism stands. Only when the scan
-    * is provably under-parallel (naturalSplits < cores) does it
-    * append a round-robin repartition sized rows/rowsPerTask(name), capped
-    * at the core count. Round-robin keeps `sortBeforeRepartition`
-    * determinism (SPARK-23207) and, feeding only order-independent
-    * consumers (aggregates, joins, explicit-key windows), cannot
-    * change any result.
-    *
-    * Apply ONLY where heavy per-row compute precedes the first
-    * exchange and no selective filter would have pushed down to the
-    * scan (the repartition sits above the scan, so a filter above it
-    * no longer prunes parquet row groups — irrelevant for the
-    * full-scan analytics that use this, by construction). */
-  def fanOut(df: DataFrame, s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val bytes = fileBytesOf(s, path)
-    // INTENTIONAL conservatism vs FilePartition.maxSplitBytes (ADVICE
-    // r12 asked to mirror min(maxPartitionBytes, max(openCostInBytes,
-    // bytes/parallelism)) here): Spark's byte-range splits overstate
-    // WORK parallelism for parquet — a row group is processed by the
-    // one split containing its midpoint, so a small/mid-size file
-    // scanned as many thin byte ranges still does all row-group work
-    // in ceil(bytes / rowGroupBytes) tasks. With the default 128 MB
-    // row-group target, ceil(bytes / maxPartitionBytes) IS that
-    // estimate; mirroring maxSplitBytes would count empty byte-range
-    // tasks and skip a needed fan-out on single-row-group files. The
-    // cost of the conservatism is one redundant (cheap, row-count-
-    // capped) round-robin exchange on inputs in the 128 MB·cores
-    // band; above it the gate is the identity either way.
-    val splitBytes = math.max(1L, s.sessionState.conf.filesMaxPartitionBytes)
-    val naturalSplits = math.max(1L, (bytes + splitBytes - 1L) / splitBytes)
-    val cores = s.sparkContext.defaultParallelism.toLong
-    if (naturalSplits >= cores) df
-    else {
-      val rows = rowCount(s, dir, name)
-      val per = rowsPerTask(name)
-      val want = math.max(1L, (rows + per - 1L) / per)
-      val n = math.min(cores, want)
-      if (n <= naturalSplits) df else df.repartition(n.toInt)
-    }
-  }
-
-  /** Rows per fanned-out task, one value per table: few where the
-    * per-row work is heavy (documents' text kernels, embeddings'
-    * 64-d vector math, events' decimal casts), 25000 elsewhere. */
-  private def rowsPerTask(name: String): Long = name match {
-    case "documents" => 250L
-    case "embeddings" => 100L
-    case "events" => 4000L
-    case _ => 25000L
-  }
-
-  /** The documents table fanned out for per-doc text kernels
-    * (tokenize, n-gram HOFs, hashes), which otherwise run in a
-    * single-split scan's one task at any core count. */
-  def fannedDocs(s: SparkSession, dir: String): DataFrame =
-    fanOut(documents(s, dir), s, dir, "documents")
-
-  /** Total file bytes under `path`, memoized per (path, tick) on the
-    * same epoch discipline as [[fileStamp]] (at most one listing per
-    * dir per tick; a writer that rewrites the dir bumps the tick). */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-  private def fileBytesOf(s: SparkSession, path: String): Long = {
-    val tick = stampTick.get()
-    bytesCache.compute(path, (_, cur) =>
-      if (cur != null && cur._1 == tick) cur
-      else (tick, listBytes(s, path)))._2
-  }
-  private def listBytes(s: SparkSession, path: String): Long =
-    leafFiles(s, path).fold(0L)(_.map(_.getLen).sum)
 
   /** Register every table as a temp view (for spark.sql surfaces). */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -2,15 +2,17 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Session extensions (activate with
   * spark.sql.extensions=graft.plans.GraftExtensions) — the idiomatic
   * plug-in point for custom Catalyst pieces. They register graft's
-  * native expressions and aggregates as SQL functions, two optimizer
-  * rules ([[RewriteDotProduct]], [[RewriteBoundedLevenshtein]]), one
-  * AQE runtime optimizer rule ([[SmallSortInOnePartition]]) and one
-  * planner strategy (SessionizeStrategy).
+  * native expressions and aggregates as SQL functions, three optimizer
+  * rules ([[RewriteDotProduct]], [[RewriteBoundedLevenshtein]] and
+  * [[FanOutUnderSplitScans]], the one place that decides when a scan
+  * fans out across cores), one AQE runtime optimizer rule
+  * ([[SmallSortInOnePartition]]) and one planner strategy
+  * (SessionizeStrategy).
   *
   * The extension is required, not optional: every operator that calls
   * a graft_* function has that one code path and no built-in
@@ -18,6 +20,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * with UNRESOLVED_ROUTINE. `graft.GraftSession` always loads it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions.intLiteral
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       new FunctionIdentifier("graft_dot_long"),
@@ -33,16 +37,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 4,
           s"graft_ivf_top requires (vec, codebook, norms, p literal), got ${children.length}")
-        val p = children(3) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue,
-              s"graft_ivf_top p must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_top p must be an integer literal, got $other")
-        }
-        IvfTopCentroids(children.head, children(1), children(2), p)
+        IvfTopCentroids(children.head, children(1), children(2),
+          intLiteral("graft_ivf_top", "p", children(3)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_ivf_top_l2"),
@@ -50,16 +46,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 4,
           s"graft_ivf_top_l2 requires (vec, codebook, norms2, p literal), got ${children.length}")
-        val p = children(3) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue,
-              s"graft_ivf_top_l2 p must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_top_l2 p must be an integer literal, got $other")
-        }
-        IvfTopCentroids(children.head, children(1), children(2), p, l2 = true)
+        IvfTopCentroids(children.head, children(1), children(2),
+          intLiteral("graft_ivf_top_l2", "p", children(3)), l2 = true)
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_kmv"),
@@ -67,16 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           s"graft_kmv requires exactly (value, k literal) arguments, got ${children.length}")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue,
-              s"graft_kmv k must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv k must be an integer literal, got $other")
-        }
-        KmvSketchAgg(children.head, k)
+        KmvSketchAgg(children.head, intLiteral("graft_kmv", "k", children(1)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_mg_sketch"),
@@ -84,16 +63,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           s"graft_mg_sketch requires exactly (value, capacity literal) arguments, got ${children.length}")
-        val cap = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue,
-              s"graft_mg_sketch capacity must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_mg_sketch capacity must be an integer literal, got $other")
-        }
-        MisraGriesAgg(children.head, cap)
+        MisraGriesAgg(children.head, intLiteral("graft_mg_sketch", "capacity", children(1)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_bloom_agg"),
@@ -101,7 +71,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2 || children.length == 3,
           s"graft_bloom_agg requires (hash, expectedItems[, fpp]), got ${children.length} args")
-        import org.apache.spark.sql.catalyst.expressions.Literal
         val items = children(1) match {
           case Literal(v: Int, _) => v.toLong
           case Literal(v: Long, _) => v
@@ -124,16 +93,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 3,
           s"graft_cms requires (md5_hex, depth literal, width literal), got ${children.length} args")
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue, s"graft_cms $what must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_cms $what must be an integer literal, got $other")
-        }
-        CmsSketchAgg(children.head, intLit(children(1), "depth"), intLit(children(2), "width"))
+        CmsSketchAgg(children.head, intLiteral("graft_cms", "depth", children(1)),
+          intLiteral("graft_cms", "width", children(2)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_hdr"),
@@ -141,16 +102,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 3,
           s"graft_hdr requires (value, b literal, pct literal), got ${children.length} args")
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue, s"graft_hdr $what must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_hdr $what must be an integer literal, got $other")
-        }
-        HdrQuantileAgg(children.head, intLit(children(1), "b"), intLit(children(2), "pct"))
+        HdrQuantileAgg(children.head, intLiteral("graft_hdr", "b", children(1)),
+          intLiteral("graft_hdr", "pct", children(2)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_might_contain"),
@@ -166,15 +119,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 3,
           s"graft_hilbert requires (x, y, bits literal), got ${children.length} args")
-        val bits = children(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>
-            require(v >= 1 && v <= 31, s"graft_hilbert bits out of range: $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_hilbert bits must be an integer literal, got $other")
-        }
-        HilbertIndex(children.head, children(1), bits)
+        HilbertIndex(children.head, children(1), intLiteral("graft_hilbert", "bits", children(2)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_lcp"),
@@ -190,20 +135,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 3,
           s"graft_topk requires (score, payload, k literal), got ${children.length} args")
-        val k = children(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>
-            require(v >= 1 && v <= Int.MaxValue,
-              s"graft_topk k must fit a positive Int, got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_topk k must be an integer literal, got $other")
-        }
-        TopKAgg(children.head, children(1), k)
+        TopKAgg(children.head, children(1), intLiteral("graft_topk", "k", children(2)))
       }))
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectOptimizerRule(_ => RewriteBoundedLevenshtein)
+    ext.injectOptimizerRule(FanOutUnderSplitScans)
     ext.injectRuntimeOptimizerRule(_ => SmallSortInOnePartition)
     ext.injectPlannerStrategy(_ => SessionizeStrategy)
+  }
+}
+
+object GraftExtensions {
+
+  /** The Int value of a function's integer-literal argument: an Int,
+    * or a Long that fits one. It only converts; each expression checks
+    * its own value range (in `checkInputDataTypes`, or
+    * [[IvfTopCentroids]]' constructor), so `graft_topk(s, p, 0)` and
+    * `graft_topk(s, p, 0L)` fail alike. */
+  private def intLiteral(fn: String, what: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case Literal(v: Long, _) if v.isValidInt => v.toInt
+    case other => throw new IllegalArgumentException(
+      s"$fn $what must be an integer literal that fits an Int, got $other")
   }
 }

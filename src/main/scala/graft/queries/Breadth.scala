@@ -62,7 +62,7 @@ object Breadth {
     * string carries the same information for the compare. */
   def q68ArrayOps(s: SparkSession, dir: String): DataFrame = {
     val toks = graft.operators.TextAnalysis.tokens(col("text"))
-    Tables.fannedDocs(s, dir) // fanOut (r12): tokenize + vocab sort map-side
+    Tables.documents(s, dir)
       .select(col("doc_id"), toks.as("t"))
       .select(
         col("doc_id"),
@@ -248,19 +248,7 @@ object Breadth {
       col("l_shipdate").cast("date").as("ship"),
       date_add(col("l_shipdate").cast("date"),
         col("l_quantity").cast("int") % 20).as("receipt"))
-    // fanOut the PROBE side (round 13): the planner broadcasts one
-    // side of this self-join, so the per-order pair generation +
-    // interval filter ran inside the single-split scan's ONE task
-    // (measured 2.53 s with 0.2 MB moved at local[32]); fanning the
-    // streamed side spreads the probe work across cores, identity at
-    // production scale (Tables.fanOut gate)
-    val lif = Tables.fanOut(Tables.lineitem(s, dir), s, dir, "lineitem")
-      .select(
-        col("l_orderkey").as("order_id"), col("l_linenumber").as("line_no"),
-        col("l_shipdate").cast("date").as("ship"),
-        date_add(col("l_shipdate").cast("date"),
-          col("l_quantity").cast("int") % 20).as("receipt"))
-    val a = lif.select(col("order_id"), col("line_no").as("line_a"),
+    val a = li.select(col("order_id"), col("line_no").as("line_a"),
       col("ship").as("ship_a"), col("receipt").as("receipt_a"))
     val b = li.select(col("order_id"), col("line_no").as("line_b"),
       col("ship").as("ship_b"), col("receipt").as("receipt_b"))
@@ -450,13 +438,6 @@ object Breadth {
     * edges are deduped once up front, and nothing ever leaves the
     * executors. */
   def q135PageRank(s: SparkSession, dir: String): DataFrame = {
-    // NOTE (r12, measured rejection): Tables.fanOut on the lineitem
-    // side was tried (full-width 4.60 s, projected 4.26 s vs 3.76 s
-    // plain, isolated min-of-5) and hurts here: the loop's broadcast
-    // builds replay rounds from the persisted e2/nodes caches, and a
-    // fanned cache multiplies every replay stage's task count while
-    // the one-task distinct partial it parallelizes was never the
-    // bottleneck. Plain scan stays.
     val edges = Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir),
         col("l_orderkey") === col("o_orderkey"))
@@ -622,7 +603,7 @@ object Breadth {
   def q174ItemCosine(s: SparkSession, dir: String): DataFrame = {
     // read by pop + both pair-join sides: persist or the scan+distinct
     // runs three times (q135's iterative-lineage lesson)
-    val d = Tables.fanOut(Tables.lineitem(s, dir), s, dir, "lineitem")
+    val d = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("order_id"), col("l_partkey"))
       .distinct()
       .persist()

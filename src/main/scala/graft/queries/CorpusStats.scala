@@ -34,7 +34,7 @@ object CorpusStats {
   def q277ShardVocabCurve(s: SparkSession, dir: String): DataFrame = {
     val shard = (conv(substring(md5(col("doc_id").cast("string")), 1, 4),
         16, 10).cast("long") % lit(8L)).cast("int")
-    val st = Tables.fannedDocs(s, dir) // fanOut (r12): tokenize + explode map-side
+    val st = Tables.documents(s, dir)
       .select(shard.as("shard"),
         explode(array_distinct(TextAnalysis.tokens(col("text")))).as("tok"))
       .distinct()

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.Tables.fannedDocs
+import graft.Tables.documents
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -24,7 +24,7 @@ object CurationOps {
     * oracle keeps the windowed formulation as the spec. */
   def q59TokenPacking(s: SparkSession, dir: String): DataFrame = {
     val budget = 2000L
-    val counted = fannedDocs(s, dir)
+    val counted = documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).cast("bigint").as("token_count"))
     graft.operators.PrefixSum
       .withRunningSum(counted, "doc_id", "token_count", "cum_tokens")
@@ -52,17 +52,15 @@ object CurationOps {
     */
   def q63Contamination(s: SparkSession, dir: String): DataFrame = {
     val t = 0.9
-    // fanOut (r12): this tokenize+fingerprint projection is consumed
-    // by five subtrees, each re-running it map-side in the scan's one
-    // task; the fan-out parallelizes every re-run (a persist was also
-    // tried and measured a small LOSS — the columnar cache encode of
-    // the token/prefix arrays costs more than the parallel recompute;
-    // r13 re-tried sharing via localCheckpoint — serialized row blocks
-    // instead of columnar encode — and measured a wash, 4.49 vs 4.42 s
-    // at sf0.1/32c: the five recomputes are embarrassingly parallel
-    // map work, and any materialization of the wide token arrays costs
+    // this tokenize+fingerprint projection is consumed by five
+    // subtrees, each re-running it map-side (a persist was tried and
+    // measured a small LOSS — the columnar cache encode of the
+    // token/prefix arrays costs more than the recompute; r13 re-tried
+    // sharing via localCheckpoint — serialized row blocks instead of
+    // columnar encode — and measured a wash, 4.49 vs 4.42 s at
+    // sf0.1/32c: any materialization of the wide token arrays costs
     // what it saves. VERDICT r12 item 5 closed as a measured rejection)
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"),
         TextAnalysis.fingerprint(col("text")).as("fp"),
         sort_array(array_distinct(TextAnalysis.tokens(col("text")))).as("toks"))
@@ -110,7 +108,7 @@ object CurationOps {
     * of codegen'd regexp_replace (PII synthesized deterministically
     * onto the docs so the scrubber has real targets). */
   def q64PiiScrub(s: SparkSession, dir: String): DataFrame = {
-    val withPii = fannedDocs(s, dir)
+    val withPii = documents(s, dir)
       .withColumn("dirty",
         concat(col("text"), lit(" contact user"), col("doc_id"),
           lit("@example.com or +1-555-000"), col("doc_id"), lit(" now")))
@@ -130,7 +128,7 @@ object CurationOps {
   /** Repetition metrics: distinct-token ratio and dominant token
     * share — the cheap repetitive-document filter. */
   def q65Repetition(s: SparkSession, dir: String): DataFrame = {
-    val terms = fannedDocs(s, dir)
+    val terms = documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_toks"))
       .select(col("doc_id"), size(col("_toks")).cast("bigint").as("total_tokens"),
         explode(col("_toks")).as("term"))
@@ -162,7 +160,7 @@ object CurationOps {
   def q78StratifiedSample(s: SparkSession, dir: String): DataFrame = {
     val cap = 30
     val w = Window.partitionBy("lang").orderBy(col("sample_key"), col("doc_id"))
-    fannedDocs(s, dir)
+    documents(s, dir)
       .withColumn("sample_key", md5(col("doc_id").cast("string")))
       .withColumn("stratum_rank", row_number().over(w))
       .filter(col("stratum_rank") <= cap)
@@ -179,7 +177,7 @@ object CurationOps {
   def q79WeightedSample(s: SparkSession, dir: String): DataFrame = {
     val frac = conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
       .cast("double") / lit(math.pow(16.0, 12.0))
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(col("doc_id"),
         TextAnalysis.qualityScore(col("text")).as("quality_score"),
         frac.as("sample_frac"))
@@ -202,7 +200,7 @@ object CurationOps {
     * corpus. */
   def q124QuotaApportion(s: SparkSession, dir: String): DataFrame = {
     val budget = 200L
-    val d = fannedDocs(s, dir).select(col("doc_id"), col("source"),
+    val d = documents(s, dir).select(col("doc_id"), col("source"),
       md5(col("doc_id").cast("string")).as("sample_key"))
     val counts = d.groupBy("source").agg(count(lit(1)).as("n"))
     val shares = counts.crossJoin(counts.agg(sum(col("n")).as("total")))
@@ -240,7 +238,7 @@ object CurationOps {
     // blow-up); all values exact in doubles
     val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
       .cast("double") + 1.0) / lit(math.pow(16.0, 12.0))
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"), col("source"),
         greatest(col("n_chars"), lit(1L)).as("weight"))
       .withColumn("priority", col("weight").cast("double") / u)
@@ -266,7 +264,7 @@ object CurationOps {
     * ingest order. One window per stratum key; no global sort. */
   def q152SystematicSample(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(col("doc_id"), col("lang"),
         md5(col("doc_id").cast("string")).as("h"))
       .withColumn("rn", row_number().over(w))
@@ -289,7 +287,7 @@ object CurationOps {
     */
   def q200EpochShards(s: SparkSession, dir: String): DataFrame = {
     val budget = 2000L
-    val counted = fannedDocs(s, dir)
+    val counted = documents(s, dir)
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("bigint").as("token_count"))
     def epochPack(epoch: Int): DataFrame = {
@@ -324,7 +322,7 @@ object CurationOps {
     * assignment adds zero further data movement at 100 TB. */
   def q240ContextPacking(s: SparkSession, dir: String): DataFrame = {
     val ctxLen = 512L
-    val counted = fannedDocs(s, dir)
+    val counted = documents(s, dir)
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("bigint").as("token_count"))
       .withColumn("shuffle_key", md5(concat_ws(":", lit("ctx"), col("doc_id"))))
@@ -364,7 +362,7 @@ object CurationOps {
     // `kept` an attribute; at 100 TB this stage is a staged table
     // anyway (the gate report IS a pipeline artifact, q212). */
     val gated = MixOps.withFilterRules(
-        fannedDocs(s, dir).select(col("doc_id"), col("lang"),
+        documents(s, dir).select(col("doc_id"), col("lang"),
           col("text")))
       .select(col("doc_id"), col("text"), col("kept"))
       .localCheckpoint()
@@ -386,7 +384,7 @@ object CurationOps {
     // stage 4: 512-token context packing of the survivors (q240).
     // `released` is persisted across PrefixSum's THREE upstream reads
     // (range-boundary sampling, subtotal pass, phase-2 materialize) —
-    // the q214/q238 fan-out lesson: without it every read replays the
+    // the q214/q238 lesson: without it every read replays the
     // gate's O(n²)-per-doc repetition HOFs and the mask cascade
     // (measured 31.7 s in-suite; ~3 s with the 2-column frame cached).
     // Safe to release right after withRunningSum returns: its phase 1
@@ -431,7 +429,7 @@ object CurationOps {
     * a 100 TB corpus are bucketed by the PK, so the join co-locates
     * without a shuffle; the status rollup is a 4-group aggregate. */
   def q245ReleaseDiff(s: SparkSession, dir: String): DataFrame = {
-    val docs = fannedDocs(s, dir).select(col("doc_id"), col("text"))
+    val docs = documents(s, dir).select(col("doc_id"), col("text"))
     def leg(df: DataFrame, fp: String, tc: String) = df.select(col("doc_id"),
       TextAnalysis.fingerprint(col("text")).as(fp),
       TextAnalysis.tokenCount(col("text")).cast("bigint").as(tc))
@@ -468,7 +466,7 @@ object CurationOps {
     * budget (≈ budget/min-doc-tokens docs), never by corpus size. */
   def q222ShardManifest(s: SparkSession, dir: String): DataFrame = {
     val budget = 2000L
-    val counted = fannedDocs(s, dir)
+    val counted = documents(s, dir)
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("bigint").as("token_count"))
       .withColumn("shuffle_key", md5(concat_ws(":", lit(0), col("doc_id"))))
@@ -545,7 +543,7 @@ object CurationOps {
     * probe set mixes present fingerprints (doc_id%10=3) with absent
     * ones (exercising the exact-join FP kill). */
   def q263BloomPointLookup(s: SparkSession, dir: String): DataFrame = {
-    val docs = fannedDocs(s, dir)
+    val docs = documents(s, dir)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val path = s"/root/repo/target/graft_bloomidx/$tag"
     graft.operators.BloomIndex.ensureBuilt(docs, 16, path)
@@ -569,7 +567,7 @@ object CurationOps {
     * measured from the post-sweep FILES, so the oracle's
     * before−deleted arithmetic certifies the on-disk result. */
   def q269RetentionSweep(s: SparkSession, dir: String): DataFrame = {
-    val docs = fannedDocs(s, dir)
+    val docs = documents(s, dir)
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val path = s"/root/repo/target/graft_retention/$tag"
     graft.operators.BloomIndex.build(docs, 16, path)
@@ -591,7 +589,7 @@ object CurationOps {
     * NULL novelty through the universe left-join (the q195 lesson —
     * never drop rows the panel is supposed to account for). */
   def q275ReleaseNovelty(s: SparkSession, dir: String): DataFrame = {
-    val docs = fannedDocs(s, dir).select(col("doc_id"), col("text"))
+    val docs = documents(s, dir).select(col("doc_id"), col("text"))
     val v1 = docs.filter(pmod(col("doc_id"), lit(17)) =!= 3)
     val v2 = docs.filter(pmod(col("doc_id"), lit(23)) =!= 5)
       .withColumn("text", when(pmod(col("doc_id"), lit(11)) === 7,

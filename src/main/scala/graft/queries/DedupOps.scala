@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.Tables.fannedDocs
+import graft.Tables.documents
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,7 +21,7 @@ object DedupOps {
     * with exact 3-shingle Jaccard. The full scalable near-dup
     * pipeline: shingle → sign → band → bucket-join → verify. */
   def q46MinhashNearDup(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val pairs = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     Dedup.verifyJaccard(pairs, d, "doc_id", "text", shingleN = 3)
@@ -33,7 +33,7 @@ object DedupOps {
   /** 64-bit SimHash fingerprints per document (deterministic across
     * runs — xxhash64 token hashing, sign-of-bit-sum aggregation). */
   def q47SimhashFingerprint(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhash64(fannedDocs(s, dir), "doc_id", "text")
+    Dedup.simhash64(documents(s, dir), "doc_id", "text")
       .select(col("doc_id"), col("simhash"))
       .orderBy("doc_id")
 
@@ -41,7 +41,7 @@ object DedupOps {
     * maxHamming stays at 7 — the pigeonhole recall guarantee of the
     * 8-chunk bucketing (see Dedup.simhashNearDups). */
   def q48SimhashNearDup(s: SparkSession, dir: String): DataFrame = {
-    val sigs = Dedup.simhash64(fannedDocs(s, dir), "doc_id", "text")
+    val sigs = Dedup.simhash64(documents(s, dir), "doc_id", "text")
     Dedup.simhashNearDups(sigs, "doc_id", maxHamming = 7)
       .select("id_a", "id_b", "hamming")
       .orderBy("id_a", "id_b")
@@ -52,7 +52,7 @@ object DedupOps {
     * with its canonical survivor flag — the keep-one-per-cluster step
     * a curation pipeline runs after pair detection. */
   def q77DedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val pairs = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -77,7 +77,7 @@ object DedupOps {
     * pattern). Both labelings are the component-min id, so
     * agreement is exact, not just up to relabeling. */
   def q266StarccClusters(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val pairs = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -109,7 +109,7 @@ object DedupOps {
     * a ≤10-row histogram × 5 configs. */
   def q272LshTuner(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis.tokens
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val a = d.select(col("doc_id").as("doc_a"),
       array_distinct(tokens(col("text"))).as("ta"))
     val b = d.select(col("doc_id").as("doc_b"),
@@ -155,7 +155,7 @@ object DedupOps {
     * are near-dup cluster sizes (small by construction at any corpus
     * scale), so the per-key sort is bounded and skew-free. */
   def q220QualitySurvivor(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val pairs = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -187,7 +187,7 @@ object DedupOps {
     * pairs are scored — the corpus never self-joins, so the per-batch
     * cost scales with the increment, not the corpus. */
   def q86IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val isInc = col("doc_id") % 10 === 0
     val fp = d.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
     val exact = fp.filter(isInc)
@@ -219,7 +219,7 @@ object DedupOps {
     * near-dup clusters (q77's connected components keep the min-id
     * doc per cluster). One anti-join against the loser set. */
   def q93DedupCorpus(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val pairs = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -245,7 +245,7 @@ object DedupOps {
     * the q77 clustering plus one keyed join of the (dup-rate-bounded)
     * label set back onto the corpus. */
   def q122LeakageSplit(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val pairs = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -278,7 +278,7 @@ object DedupOps {
     * for surviving candidates. */
   def q146Containment(s: SparkSession, dir: String): DataFrame = {
     val n = 8
-    val t = fannedDocs(s, dir)
+    val t = documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     val grams = t.select(col("doc_id"),
         explode(TextAnalysis.wordNgrams(col("toks"), n)).as("gram"))
@@ -333,13 +333,6 @@ object DedupOps {
       i => concat_ws(" ", slice(col("toks"), i, lit(3)))))
 
   def q151SimilarityJoin(s: SparkSession, dir: String): DataFrame = {
-    // NO fanOut here (round 13, VERDICT item 6 — the q135-class
-    // fanOut×persist interaction, re-measured at 32c): this scan feeds
-    // a .persist() whose columnar encode of the shingle-set arrays is
-    // the expensive step, and the fanned round-robin exchange in front
-    // of it measured q151 at 4.89 s vs 2.83 s without (sf0.1,
-    // local[32], min-of-3, same-session A/B) — same mechanism as the
-    // documented q135 rejection.
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     val sh = toks.select(col("doc_id"), shingleSetCol.as("sset"))
@@ -402,7 +395,7 @@ object DedupOps {
     * rows, so the hot-key bound is the SOURCE alphabet, not corpus
     * size — then one |sources|²-row aggregate. */
   def q158SourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sv = fannedDocs(s, dir)
+    val sv = documents(s, dir)
       .select(col("source"), TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("source"), explode(shingleSetCol).as("g"))
       .distinct()
@@ -437,7 +430,7 @@ object DedupOps {
     * number a curation pipeline should publish (q127's
     * measured-findings doctrine, applied to LSH). */
   def q166LshRecall(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val exsh = Dedup.shingleSets(d, "doc_id", "text", shingleN = 3)
       .select(col("doc_id"), explode(col("_shingles")).as("g"))
     val truePairs = exsh.select(col("doc_id").as("id_a"), col("g"))

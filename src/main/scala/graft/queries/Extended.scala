@@ -155,7 +155,7 @@ object Extended {
   /** Quantile-gated filtering: keep documents at-or-above the corpus
     * median quality score (single-row quantile broadcast back). */
   def q54QualityFilter(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.fannedDocs(s, dir) // fanOut (r12): qualityScore map-side
+    val scored = Tables.documents(s, dir)
       .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality_score"))
     val cut = scored.agg(
       expr("percentile(quality_score, 0.5)").as("median_score"))
@@ -248,11 +248,9 @@ object Extended {
     * both on bounded keys. Scores rounded to 6dp BEFORE ranking so
     * cross-engine libm ulps can't reorder ranks. */
   def q56TfIdf(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.fannedDocs(s, dir) // fanOut (r12): tokenize + explode map-side
-    // corpus size: memoized exchange-free scalar (ADVICE r12 — a
-    // count() on the fanned frame paid the round-robin shuffle just
-    // to count rows; Tables.documentCount counts the bare scan once
-    // and amortizes across compositions, same value by construction)
+    val d = Tables.documents(s, dir)
+    // corpus size: memoized scalar (Tables.documentCount counts the
+    // bare scan once and amortizes across compositions)
     val n = Tables.documentCount(s, dir)
     val terms = d
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_toks"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.Tables.fannedDocs
+import graft.Tables.documents
 import graft.operators.{Dedup, Triangles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,7 +31,7 @@ object GraphOps {
     * every step is a keyed join/agg (see the operator's scaladoc).
     */
   def q147TriangleCensus(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val edges = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -53,7 +53,7 @@ object GraphOps {
     * levels, and KCoreSpec pins that the fixture graph reaches its
     * fixpoint within them. */
   def q203KCore(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val edges = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)
@@ -84,10 +84,8 @@ object GraphOps {
     * integer fixed-point rounds, replayed bit-identically by the
     * oracle's unrolled CTE levels. */
   def q205Hits(s: SparkSession, dir: String): DataFrame = {
-    // fanOut (r12): edge build (broadcast join + distinct partials)
-    // is map-side over the single-split lineitem scan
     val edges = Tables.orders(s, dir)
-      .join(Tables.fanOut(Tables.lineitem(s, dir), s, dir, "lineitem"),
+      .join(Tables.lineitem(s, dir),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("hub"), col("l_partkey").as("auth"))
     // NOTE (r12, measured rejection): Hits.runConverged was tried here
@@ -111,7 +109,7 @@ object GraphOps {
     * rounds so the DuckDB oracle unrolls the identical trajectory;
     * LabelPropSpec pins that earlyStop returns the same labels. */
   def q213LabelProp(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val sigs = Dedup.minhashSignatures(d, "doc_id", "text", k = 16, shingleN = 3)
     val cand = Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4, rowsPerBand = 4)
     val edges = Dedup.verifyJaccard(cand, d, "doc_id", "text", shingleN = 3)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.Tables.fannedDocs
+import graft.Tables.documents
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,8 +35,7 @@ object MixOps {
     * thresholds from the Gopher repetition family adapted to this
     * corpus's short synthetic docs. */
   def q208RepetitionSignals(s: SparkSession, dir: String): DataFrame = {
-    // fanOut (r12): per-doc top-word / trigram HOFs are map-side only
-    val d = fannedDocs(s, dir).select(col("doc_id"), toks.as("toks"))
+    val d = documents(s, dir).select(col("doc_id"), toks.as("toks"))
     val n = size(col("toks"))
     val topCnt = coalesce(
       array_max(transform(array_distinct(col("toks")),
@@ -87,7 +86,7 @@ object MixOps {
     * because the fixture has one table) and broadcasts, making the
     * whole check a map-side semi-join over the training scan. */
   def q209Decontamination(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"), toks.as("toks"), docFrac.as("frac"))
     val grams = d.select(col("doc_id"), col("frac"),
       explode(when(size(col("toks")) >= 5,
@@ -133,7 +132,7 @@ object MixOps {
     * plus the FP budget — the only reason a production
     * decontamination pass over petabytes is affordable. */
   def q239BloomDecontam(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"), toks.as("toks"), docFrac.as("frac"))
     val grams = d.select(col("doc_id"), col("frac"),
       explode(when(size(col("toks")) >= 5,
@@ -195,7 +194,7 @@ object MixOps {
     * rarer (more identifying) grams. Output is Ω(pairs) — the audit
     * is inherently pair-shaped, and pairs ≈ contaminated docs. */
   def q241ContaminationPairs(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"), toks.as("toks"), docFrac.as("frac"))
     val grams = d.select(col("doc_id"), col("frac"),
       explode(when(size(col("toks")) >= 5,
@@ -289,7 +288,7 @@ object MixOps {
     * a scan-speed token count: nothing here grows with corpus size
     * except the first groupBy. */
   def q211MixtureWeights(s: SparkSession, dir: String): DataFrame = {
-    val bySrc = fannedDocs(s, dir)
+    val bySrc = documents(s, dir)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(TextAnalysis.tokenCount(col("text")).cast("bigint")).as("n_tokens"))
@@ -334,7 +333,7 @@ object MixOps {
   def q252UnimaxAlloc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val epochCap = 4L
-    val bySrc = fannedDocs(s, dir)
+    val bySrc = documents(s, dir)
       .groupBy("source")
       .agg(sum(TextAnalysis.tokenCount(col("text")).cast("bigint")).as("n_tokens"))
       .as[(String, Long)].collect()
@@ -368,7 +367,7 @@ object MixOps {
     * a linear classifier costs exactly one pass over the corpus,
     * which is the whole point of the fastText family. */
   def q218HashClassifier(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir).select(col("doc_id"), toks.as("toks"))
+    val d = documents(s, dir).select(col("doc_id"), toks.as("toks"))
     val bigrams = when(size(col("toks")) >= 2,
       transform(sequence(lit(1), size(col("toks")) - 1),
         i => concat_ws("_",
@@ -437,7 +436,7 @@ object MixOps {
     // (measured 9.9 s vs 0.5 s over the materialized arrays at
     // sf0.1); the returned frame recomputes base lazily in one
     // scan-speed pass, so no cache outlives the call
-    val base = fannedDocs(s, dir)
+    val base = documents(s, dir)
       .select(col("doc_id"), toks.as("toks"), col("text"))
       .select(col("doc_id"),
         transform(concat(col("toks"), bigrams), f => bucket(f)).as("bks"),
@@ -490,7 +489,7 @@ object MixOps {
   def q219AdaptiveThreshold(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("source").orderBy(col("quality"), col("doc_id"))
     val wAll = Window.partitionBy("source")
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(col("doc_id"), col("source"),
         TextAnalysis.qualityScore(col("text")).as("quality"))
       .withColumn("src_rank", row_number().over(w).cast("bigint"))
@@ -510,7 +509,7 @@ object MixOps {
     * the corpus scan plus the q209 gram semi-join — the datasheet of
     * a 100 TB corpus costs one pass. */
   def q221CorpusDatasheet(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("source"), col("lang"),
         TextAnalysis.tokenCount(col("text")).cast("bigint").as("token_count"),
         round(TextAnalysis.qualityScore(col("text")) * 1000000).cast("bigint")
@@ -566,7 +565,7 @@ object MixOps {
     * corpus size. */
   def q224Syndication(s: SparkSession, dir: String): DataFrame = {
     val bag = md5(array_join(array_sort(array_distinct(toks)), " "))
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(bag.as("bag"), col("source"), col("doc_id"))
       .groupBy("bag")
       .agg(count(lit(1)).as("n_copies"),
@@ -627,9 +626,7 @@ object MixOps {
   }
 
   def q212FilterReport(s: SparkSession, dir: String): DataFrame =
-    // fanOut (r12): the rule gate's tokenize + trigram HOFs are pure
-    // map-side work over the single-split scan
-    withFilterRules(fannedDocs(s, dir)
+    withFilterRules(documents(s, dir)
         .select(col("doc_id"), col("lang"), col("text")))
       .select("doc_id", "lang", "token_count", "quality_score",
         "top_word_frac", "dup_trigram_frac", "failed_rules", "kept")
@@ -724,12 +721,7 @@ object MixOps {
     * as early as possible. */
   private def curationCleanStage(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // fanOut (r12): the enriched scan (tokenize + 3 quality regexes +
-    // md5 coin) inherits the single-split scan's ONE partition and the
-    // persist pins that layout — every downstream stage then reads a
-    // 1-partition cache until its first exchange. 250 docs/task
-    // spreads the text work; identity at production scale (guide §2.5)
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
         toks.as("toks"), docFrac.as("frac"))
@@ -860,7 +852,7 @@ object MixOps {
       col("source"), lit("-"), pmod(col("doc_id"), lit(97)).cast("string"),
       lit("."), element_at(tld, pmod(col("doc_id"), lit(4)).cast("int") + 1),
       lit("/"), col("lang"), lit("/page-"), col("doc_id").cast("string"))
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(col("doc_id"), col("lang"), url.as("url"))
       .withColumn("host", regexp_extract(col("url"), "^https?://([^/]+)", 1))
       .withColumn("reg_host", regexp_replace(col("host"), "^www\\.", ""))
@@ -896,7 +888,7 @@ object MixOps {
     val draw = conv(substring(md5(col("doc_id").cast("string")), 1, 6), 16, 10)
       .cast("long")
     val full = 16777216L // 16^6
-    val d = fannedDocs(s, dir).select(
+    val d = documents(s, dir).select(
       col("doc_id"),
       graft.operators.TextAnalysis.tokenCount(col("text")).cast("long").as("tc"),
       draw.as("h"))

@@ -250,10 +250,6 @@ object Quality {
     * second scan; exact quantiles ride along to show the error. */
   def q85SampleQuantiles(s: SparkSession, dir: String): DataFrame = {
     val key = md5(concat_ws("|", col("l_orderkey"), col("l_linenumber")))
-    // fanOut (r12): the md5 sample mask + two exact-percentile partial
-    // buffers ran in the scan's single task (one 11 MB file = one
-    // split) — 4.9 s serial at local[32]; spreading the map side is
-    // identity at production scale (guide §2.5)
     // cast to double BEFORE the aggregate (r12): percentile's partial
     // buffers key the value — Decimal keys hash/compare/serialize as
     // BigDecimal objects, doubles as 8 bytes. The cast is injective
@@ -263,7 +259,7 @@ object Quality {
     // is bit-identical (oracle-checked) while the map-side buffers and
     // the final merge shrink ~4×. A wider decimal (e.g. 18,2) could
     // collide in double — re-derive the ulp bound before widening.
-    Tables.fanOut(Tables.lineitem(s, dir), s, dir, "lineitem")
+    Tables.lineitem(s, dir)
       .select(col("l_extendedprice").cast("double").as("v"),
         when(key < "2", col("l_extendedprice").cast("double")).as("vs"))
       .agg(
@@ -959,11 +955,7 @@ object Quality {
     * sorted replicate means. One scan fanned out ×40 by an explode
     * (not a join), 40 aggregation groups, driver-sized tail. */
   def q165BootstrapCi(s: SparkSession, dir: String): DataFrame = {
-    // fanOut (r12): the ×40 replicate explode + md5 inverse-CDF ladder
-    // is 40 md5s per event, all map-side before the 40-group exchange —
-    // serial in the single scan task (4.25 s at local[32]); 4k
-    // rows/task spreads the ladder, identity at production scale
-    val ev = Tables.fanOut(Tables.events(s, dir), s, dir, "events")
+    val ev = Tables.events(s, dir)
       .select(col("event_id"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
     val rep = ev.select(col("event_id"), col("cents"),

@@ -28,9 +28,7 @@ object Relational {
     * regardless of input scale — holds at 100 TB.
     */
   def q01PricingSummary(s: SparkSession, dir: String): DataFrame = {
-    // fanOut (r12): five decimal partial aggregates per row ran in the
-    // scan's one task (single-split file); identity at production scale
-    val l = Tables.fanOut(Tables.lineitem(s, dir), s, dir, "lineitem")
+    val l = Tables.lineitem(s, dir)
     l.groupBy("l_returnflag", "l_linestatus")
       .agg(
         dsum(col("l_quantity")).as("sum_qty"),

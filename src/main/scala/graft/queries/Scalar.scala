@@ -60,7 +60,7 @@ object Scalar {
     * ever reaches the driver.
     */
   def q27RegexRates(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.fannedDocs(s, dir) // fanOut (r12): 4 regex gates per row, map-side
+    val d = Tables.documents(s, dir)
     d.agg(
       matchRate(col("text").rlike("spark")).as("rate_contains_spark"),
       matchRate(col("lang").rlike("^[a-z]{2}$")).as("rate_lang_wellformed"),

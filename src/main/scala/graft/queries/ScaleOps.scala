@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.Tables.fannedDocs
+import graft.Tables.documents
 import graft.functions.Funcs
 import graft.operators.{SemanticDedup, Similarity, SuffixRank, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -78,7 +78,7 @@ object ScaleOps {
     * (deterministic doc_id tie-break). One keyed window, no global
     * ordering anywhere. */
   def q99DomainCap(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("text"))
       .withColumn("quality", TextAnalysis.qualityScore(col("text")))
     val w = Window.partitionBy("source")
@@ -96,9 +96,7 @@ object ScaleOps {
     * n-gram strings, never whole documents). */
   def q100DupSpans(s: SparkSession, dir: String): DataFrame = {
     val n = 8
-    // fanOut (r12): tokenize + 8-gram HOF explode are map-side before
-    // the sized gram exchange — single-split scan = one task otherwise
-    val t = fannedDocs(s, dir)
+    val t = documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     // gated gram-exchange sizing (ExplodedJoin, round-10 sweep of the
     // q225 hazard class); the doc-keyed count aggregates are hash
@@ -113,7 +111,7 @@ object ScaleOps {
     val totals = grams.groupBy("doc_id").agg(count(lit(1)).as("total_spans"))
     val dups = grams.join(dupGrams, "gram")
       .groupBy("doc_id").agg(count(lit(1)).as("dup_spans"))
-    fannedDocs(s, dir).select("doc_id")
+    documents(s, dir).select("doc_id")
       .join(totals, Seq("doc_id"), "left")
       .join(dups, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -144,9 +142,7 @@ object ScaleOps {
     * whole pass stays linear in corpus size at 100 TB. */
   def q237DupSpanRemoval(s: SparkSession, dir: String): DataFrame = {
     val n = 8
-    // fanOut (r12): same as q100 — both gram and token-map legs
-    // re-tokenize map-side; spread the single-split scan
-    val t = fannedDocs(s, dir)
+    val t = documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     val grams = t.select(col("doc_id"),
       posexplode(TextAnalysis.wordNgrams(col("toks"), n))
@@ -218,7 +214,7 @@ object ScaleOps {
     * (binary collation ≡ rank order on the ASCII corpus). */
   def q250SuffixPanel(s: SparkSession, dir: String): DataFrame = {
     val T = 240 // truncation budget: bounds rounds, window size, LCP bytes
-    val docs = fannedDocs(s, dir)
+    val docs = documents(s, dir)
     val r = SuffixRank.ranks(docs, "doc_id", "text", T)
     val txt = docs.select(col("doc_id"), substring(col("text"), 1, T).as("_t"))
     val withSfx = r.join(txt, "doc_id")
@@ -260,7 +256,7 @@ object ScaleOps {
     * training mix adjustment. Deterministic md5-fraction coin per
     * doc; sqrt/division are IEEE-exact cross-engine. */
   def q102MixtureSample(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val counts = d.groupBy("source").agg(count(lit(1)).as("n_source"))
     // tiny gate scalar (≤ #sources rows aggregated to 1)
     val maxN = counts.agg(max(col("n_source"))).head().getLong(0)
@@ -292,7 +288,7 @@ object ScaleOps {
     * overlap) — the RAG/long-context ingestion step; one row per
     * chunk with its token span. */
   def q104TokenChunks(s: SparkSession, dir: String): DataFrame = {
-    val t = fannedDocs(s, dir)
+    val t = documents(s, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     t.select(col("doc_id"),
         explode(TextAnalysis.tokenChunks(col("toks"), chunkLen = 32, stride = 24))
@@ -316,7 +312,7 @@ object ScaleOps {
     * subtotal collect), so constructing this DataFrame already
     * executes the dedup chain. */
   def q105CurationPipeline(s: SparkSession, dir: String): DataFrame =
-    curate(fannedDocs(s, dir)).orderBy("doc_id")
+    curate(documents(s, dir)).orderBy("doc_id")
 
   /** The reusable pipeline body behind q105 — takes any documents
     * frame with (doc_id, source, lang, text). Factored out so the
@@ -484,7 +480,7 @@ object ScaleOps {
     * EAGER at build time (like q98/q105): one count() sizes the df
     * cap. */
   def q112HybridRrf(s: SparkSession, dir: String): DataFrame = {
-    val docs = fannedDocs(s, dir)
+    val docs = documents(s, dir)
       .select(col("doc_id"),
         array_distinct(TextAnalysis.tokens(col("text"))).as("toks"))
     val emb = quantized(s, dir)
@@ -536,7 +532,7 @@ object ScaleOps {
     * funnel lossless, so the output is the exact HAVING-threshold
     * answer the oracle recomputes with a full GROUP BY. */
   def q113HeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val toks = fannedDocs(s, dir)
+    val toks = documents(s, dir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("item"))
     graft.operators.HeavyHitters
       .frequentItems(toks, "item", minSupport = 0.002, capacity = 1024)
@@ -622,7 +618,7 @@ object ScaleOps {
     * size, and support is measured against each language's own token
     * count. */
   def q120GroupedHh(s: SparkSession, dir: String): DataFrame = {
-    val toks = fannedDocs(s, dir)
+    val toks = documents(s, dir)
       .select(col("lang"), explode(TextAnalysis.tokens(col("text"))).as("item"))
     graft.operators.HeavyHitters
       .frequentItemsByGroup(toks, "lang", "item", minSupport = 0.004, capacity = 1024)
@@ -685,7 +681,7 @@ object ScaleOps {
     val width = 512
     val probes = Seq("join", "hash", "scan", "filter", "merge", "column",
       "spark", "zzz_absent")
-    val toks = fannedDocs(s, dir)
+    val toks = documents(s, dir)
       .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .where(col("tok") =!= "")
     val sketches = toks.groupBy("source")
@@ -703,7 +699,7 @@ object ScaleOps {
     // Row universe = DISTINCT source × probes (matching the oracle's
     // srcs CTE): a source whose documents yield zero non-empty tokens
     // has no sketch row, but must still appear with zero estimates.
-    val universe = fannedDocs(s, dir).select(col("source")).distinct()
+    val universe = documents(s, dir).select(col("source")).distinct()
       .select(col("source"), explode(array(probes.map(lit(_)): _*)).as("tok"))
     val estsAll = universe.join(ests, Seq("source", "tok"), "left")
       .withColumn("cms_est", coalesce(col("cms_est"), lit(0L)))

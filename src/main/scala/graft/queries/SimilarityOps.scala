@@ -15,11 +15,9 @@ object SimilarityOps {
   type Q = (SparkSession, String) => DataFrame
 
   private[queries] def quantized(s: SparkSession, dir: String): DataFrame =
-    // fanOut (r12): every ANN query in this module and ScaleOps starts
-    // here, and the per-vector map work (quantize + SRP/PQ/IVF
-    // signatures) otherwise serializes in the single-split scan's one
-    // task; queries that never read `label` have it pruned
-    Tables.fanOut(Tables.embeddings(s, dir), s, dir, "embeddings")
+    // every ANN query in this module and ScaleOps starts here; queries
+    // that never read `label` have it pruned
+    Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         Similarity.quantize(col("embedding")).as("query_vec"))
 

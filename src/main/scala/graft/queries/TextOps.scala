@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.Tables.fannedDocs
+import graft.Tables.documents
 import graft.operators.TextAnalysis._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ object TextOps {
   /** Token / char / punctuation statistics per document. Pure
     * scan+project — runs at parquet read speed at any scale. */
   def q40TokenStats(s: SparkSession, dir: String): DataFrame =
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(
         col("doc_id"),
         length(col("text")).as("char_count"),
@@ -33,7 +33,7 @@ object TextOps {
   /** Language-ID: marker-word scores per language + argmax with
     * alphabetical tie-break, compared against the labeled lang. */
   def q41LangId(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val scoreCols = langMarkers.map { case (lang, re) =>
       langScore(col("text"), re).as(s"score_$lang")
     }
@@ -48,7 +48,7 @@ object TextOps {
     * gates). Expression shape mirrored exactly in the oracle so the
     * double arithmetic is bit-identical. */
   def q42QualityScore(s: SparkSession, dir: String): DataFrame =
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(
         col("doc_id"),
         length(col("text")).as("char_count"),
@@ -67,14 +67,14 @@ object TextOps {
     * kernel, one scan, no shuffle (see Dedup.winnowFingerprints). */
   def q43WinnowFingerprint(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.winnowDigest(
-        fannedDocs(s, dir), "doc_id", "text", k = 8, w = 4)
+        documents(s, dir), "doc_id", "text", k = 8, w = 4)
       .orderBy("doc_id")
 
   /** Canonical-form md5 fingerprint + exact-dedup rollup: documents
     * collapsed by fingerprint, min doc_id as survivor (deterministic,
     * unlike dropDuplicates). One shuffle on the fingerprint. */
   def q45ExactDedup(s: SparkSession, dir: String): DataFrame =
-    fannedDocs(s, dir)
+    documents(s, dir)
       .groupBy(fingerprint(col("text")).as("fingerprint"))
       .agg(
         min(col("doc_id")).as("canonical_doc_id"),
@@ -86,7 +86,7 @@ object TextOps {
     * (the verify kernel of near-dup detection; candidate generation
     * at scale is MinHash-LSH, see graft.operators.Dedup). */
   def q44NgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     val a = d.select(col("doc_id").as("doc_a"),
       array_distinct(tokens(col("text"))).as("ta"))
     val b = d.select(col("doc_id").as("doc_b"),
@@ -117,9 +117,7 @@ object TextOps {
     * is exact and order-independent, so the per-doc sum cannot
     * hash-diverge on aggregation order the way a double sum would. */
   def q133BigramLm(s: SparkSession, dir: String): DataFrame = {
-    // fanOut (r12): tokenize feeds two explode legs (bigrams +
-    // unigrams) map-side; spread the single-split scan (q217 inherits)
-    val t = fannedDocs(s, dir)
+    val t = documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val bi = t.select(col("doc_id"),
       explode(wordNgrams(col("toks"), 2)).as("bigram"))
@@ -135,7 +133,7 @@ object TextOps {
           .cast(DecimalType(18, 6)))
     val perDoc = scored.groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("logp")).as("sum_logp"))
-    fannedDocs(s, dir).select("doc_id")
+    documents(s, dir).select("doc_id")
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
@@ -158,7 +156,7 @@ object TextOps {
   def q217PerplexityBuckets(s: SparkSession, dir: String): DataFrame = {
     // the bigram-LM pipeline is consumed twice — by the EAGER tercile
     // cut collect and by the returned plan — so persist it (the q214
-    // fan-out lesson; measured 2.4 -> 1.8 s isolated at sf0.1 — the
+    // lesson; measured 2.4 -> 1.8 s isolated at sf0.1 — the
     // remainder is the LM's own in-pipeline eager steps).
     // CACHE CONTRACT: unlike q214/q223, the per-doc cache here IS
     // read by the returned plan at action time and cannot be released
@@ -194,7 +192,7 @@ object TextOps {
     * EAGER driver count at build time, q98/q105-style. */
   def q159Pmi(s: SparkSession, dir: String): DataFrame = {
     val nDocs = Tables.documentCount(s, dir)
-    val ex = fannedDocs(s, dir)
+    val ex = documents(s, dir)
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
     val cTok = ex.groupBy("tok").agg(count(lit(1)).as("c_tok"))
     val pairs = ex.select(col("doc_id"), col("tok").as("tok_a"))
@@ -222,7 +220,7 @@ object TextOps {
     * scalars (q159's idiom); everything else is one token-keyed
     * agg. */
   def q167TokenSurge(s: SparkSession, dir: String): DataFrame = {
-    val toks = fannedDocs(s, dir)
+    val toks = documents(s, dir)
       .select((col("doc_id") % 2).as("half"), explode(tokens(col("text"))).as("tok"))
     val totals = toks.groupBy("half").agg(count(lit(1)).as("t"))
       .collect().map(r => r.getAs[Long]("half") -> r.getAs[Long]("t")).toMap
@@ -249,7 +247,7 @@ object TextOps {
     * sums ([[graft.operators.PrefixSum]]). Output thinned to every
     * 20th doc. All integers; no measure ever divides. */
   def q186VocabGrowth(s: SparkSession, dir: String): DataFrame = {
-    val toks = fannedDocs(s, dir)
+    val toks = documents(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     val perDoc = toks.groupBy("doc_id").agg(count(lit(1)).as("tok_cnt"))
     val firstSeen = toks.groupBy("term").agg(min(col("doc_id")).as("fd"))
@@ -276,9 +274,7 @@ object TextOps {
   /** Shared BPE word-frequency table: one corpus scan, vocab-sized
     * result (the thing the caller persists for the training rounds). */
   private def bpeWords(s: SparkSession, dir: String): DataFrame =
-    // fanOut (r12): tokenize + explode + regex gate are map-side before
-    // the word-count exchange — single-split scan = one task otherwise
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(explode(tokens(col("text"))).as("tok"))
       .where(col("tok").rlike("^[a-z]+$") && length(col("tok")) >= 2)
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -335,7 +331,7 @@ object TextOps {
     val k1p1 = 2.2
     val oneMinusB = 0.25
     val b = 0.75
-    val docs = fannedDocs(s, dir)
+    val docs = documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val dl = docs.select(col("doc_id"), size(col("toks")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
@@ -376,7 +372,7 @@ object TextOps {
     */
   def q198DsirWeights(s: SparkSession, dir: String): DataFrame = {
     val nb = 256
-    val toks = fannedDocs(s, dir)
+    val toks = documents(s, dir)
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("t"))
       .where(col("t") =!= "")
       .withColumn("b", conv(substring(md5(col("t")), 1, 6), 16, 10)
@@ -419,7 +415,7 @@ object TextOps {
     * then summed as DECIMAL (q133's order-independent discipline).
     */
   def q201KneserNey(s: SparkSession, dir: String): DataFrame = {
-    val t = fannedDocs(s, dir)
+    val t = documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val bi = t.select(col("doc_id"),
       explode(wordNgrams(col("toks"), 2)).as("bigram"))
@@ -439,7 +435,7 @@ object TextOps {
         round(log(col("p_kn")), 6).cast(DecimalType(18, 6)).as("logp"))
     val scored = bi.join(pkn, "bigram").groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("logp")).as("sum_logp"))
-    fannedDocs(s, dir).select("doc_id")
+    documents(s, dir).select("doc_id")
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
@@ -462,7 +458,7 @@ object TextOps {
     */
   def q202Rbo(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = fannedDocs(s, dir)
+    val d = documents(s, dir)
     def topRanks(scoreCol: org.apache.spark.sql.Column, rankName: String) =
       d.select(col("doc_id"), scoreCol.as("score"))
         .orderBy(col("score").desc, col("doc_id")).limit(50)
@@ -514,7 +510,7 @@ object TextOps {
       when(id % 3 === 0, concat(lit(" reach "), email)).otherwise(lit("")),
       when(id % 4 === 0, concat(lit(" dial "), phone)).otherwise(lit("")),
       when(id % 5 === 0, concat(lit(" node "), ip)).otherwise(lit("")))
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(col("doc_id"), laced.as("laced"))
       .select(col("doc_id"),
         emailCount(col("laced")).cast("bigint").as("n_emails"),
@@ -630,7 +626,7 @@ object TextOps {
       val encoded = graft.operators.Bpe.applyMerges(words, merges)
         .select(regexp_replace(col("sym"), " ", "").as("tok"),
           size(split(trim(col("sym")), "  ")).cast("long").as("n_sub"))
-      val perSource = fannedDocs(s, dir)
+      val perSource = documents(s, dir)
         .select(col("source"), explode(tokens(col("text"))).as("tok"))
         .where(col("tok").rlike("^[a-z]+$") && length(col("tok")) >= 2)
         .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
@@ -660,7 +656,7 @@ object TextOps {
     * token counts span ~3 decades, so ±6.25% buckets keep the panel
     * readable while the certificate still holds. */
   def q249LengthPanel(s: SparkSession, dir: String): DataFrame =
-    fannedDocs(s, dir)
+    documents(s, dir)
       .select(col("source"), tokenCount(col("text")).cast("long").as("tc"))
       .rollup("source")
       .agg(count(lit(1)).as("n_docs"),

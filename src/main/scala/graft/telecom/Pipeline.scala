@@ -1,5 +1,7 @@
 package graft.telecom
 
+import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -261,19 +263,17 @@ object Pipeline {
       case "agg_customer_monthly_summary" =>
         Gold.aggCustomerMonthly(tables("fact_calls"), tables("dim_customers"))
     }
-    // write-path observation metrics per table: the gate checks that
-    // are pure per-row aggregates ride the persist write's own tasks
-    // (Dataset.observe) instead of re-scanning the written files —
-    // the reference's check-after-write second pass
-    // (pipeline_observability.py:92-173) eliminated. Uniqueness and
-    // FK checks need a shuffle/join and stay scan-sourced.
+    // write-path observation metrics per table: every table's row
+    // count, and the gate checks that are pure per-row aggregates, ride
+    // the persist write's own tasks (Dataset.observe) instead of
+    // re-scanning the written files — the reference's
+    // check-after-write second pass (pipeline_observability.py:92-173)
+    // eliminated. Uniqueness and FK checks need a shuffle/join and
+    // stay scan-sourced.
     def obsMetrics(name: String): Seq[org.apache.spark.sql.Column] = name match {
       case "silver_calls" => Seq(
-        count(lit(1)).as("rows"),
         sum(when(col("call_id").isNull, 1L).otherwise(0L)).as("null_call_id"))
-      case "fact_calls" => Seq(count(lit(1)).as("rows"))
       case "silver_network_probes" => Seq(
-        count(lit(1)).as("rows"),
         // nulls count as violations, mirroring matchRate's semantics
         sum(when(col("load_pct").cast("double").between(0, 100), 0L)
           .otherwise(1L)).as("range_viol_load_pct"))
@@ -283,32 +283,24 @@ object Pipeline {
     // inventory covers EVERY table on disk (untouched parents carry
     // seconds = 0.0); the returned manifest lists only rebuilt tables
     val inventory = topoOrder().map { name =>
+      val path = s"$outDir/$name"
       if (rebuild(name)) {
         val t0 = System.nanoTime()
         val df = mutate(name, build(name))
-        val metrics = obsMetrics(name)
-        if (metrics.nonEmpty) {
-          val obs = org.apache.spark.sql.Observation()
-          df.observe(obs, metrics.head, metrics.tail: _*)
-            .write.mode("overwrite").parquet(s"$outDir/$name")
-          observed(name) = obs.get.map { case (k, v) =>
-            k -> (if (v == null) 0L else v.asInstanceOf[Number].longValue())
-          }
-        } else {
-          df.write.mode("overwrite").parquet(s"$outDir/$name")
+        val obs = org.apache.spark.sql.Observation()
+        df.observe(obs, count(lit(1)).as("rows"), obsMetrics(name): _*)
+          .write.mode("overwrite").parquet(path)
+        observed(name) = obs.get.map { case (k, v) =>
+          k -> (if (v == null) 0L else v.asInstanceOf[Number].longValue())
         }
-        val persisted = spark.read.parquet(s"$outDir/$name")
-        tables(name) = persisted
-        // manifest row count from the write-path observation when the
-        // table carries observe metrics — the exact count was already
-        // collected as the frame was written, so a count() here would
-        // re-pay the read the observed-DQ wiring exists to remove
-        val rowCount = observed.get(name).flatMap(_.get("rows"))
-          .getOrElse(persisted.count())
-        (TableRun(name, rowCount, (System.nanoTime() - t0) / 1e9), true)
+        // the read-back starts no job: the schema is the one just
+        // written, and the row count was observed by the write
+        graft.Tables.recordSchema(spark, path, df.schema)
+        tables(name) = graft.Tables.readParquet(spark, path)
+        (TableRun(name, observed(name)("rows"), (System.nanoTime() - t0) / 1e9), true)
       } else {
         // untouched parent: serve the persisted output, no rewrite
-        val persisted = spark.read.parquet(s"$outDir/$name")
+        val persisted = graft.Tables.readParquet(spark, path)
         tables(name) = persisted
         (TableRun(name, persisted.count(), 0.0), false)
       }
@@ -338,25 +330,32 @@ object Pipeline {
     // stage the gates guard (the pipeline-observability run record a
     // warehouse job would PUT with its outputs — reference
     // pipeline_observability.py:282-351)
-    val tablesJson = inventory.map { case (r, rebuilt) =>
-      s"""{"table": "${r.table}", "rows": ${r.rows}, "seconds": ${r.seconds}, "rebuilt": $rebuilt}"""
-    }.mkString("[", ",", "]")
-    val checksJson = checks.map { c =>
-      s"""{"check": "${c.checkName}", "table": "${c.table}", "passed": ${c.passed}, """ +
-        s""""observed": ${c.observed}, "threshold": ${c.threshold}, """ +
-        s""""severity": "${c.severity}", "source": "${c.source}"}"""
-    }.mkString("[", ",", "]")
-    val servingJson = serving
-      .map(s => s"""{"query": "${s.table}", "rows": ${s.rows}, "seconds": ${s.seconds}, "refreshed": true}""")
-      .getOrElse("""{"refreshed": false, "reason": "pipeline_status BLOCKED"}""")
-    val manifestJson =
-      s"""{"generated_utc": "${java.time.Instant.now()}",
-         | "pipeline_status": "$status",
-         | "tables": $tablesJson,
-         | "checks": $checksJson,
-         | "serving": $servingJson}""".stripMargin
-    Files.write(Paths.get(outDir, "run_manifest.json"),
-      manifestJson.getBytes("UTF-8"))
+    val mapper = new ObjectMapper()
+    val record = mapper.createObjectNode()
+    record.put("generated_utc", java.time.Instant.now().toString)
+    record.put("pipeline_status", status)
+    val tablesNode = record.putArray("tables")
+    inventory.foreach { case (r, rebuilt) =>
+      tablesNode.addObject().put("table", r.table).put("rows", r.rows)
+        .put("seconds", r.seconds).put("rebuilt", rebuilt)
+    }
+    val checksNode = record.putArray("checks")
+    checks.foreach { c =>
+      checksNode.addObject().put("check", c.checkName).put("table", c.table)
+        .put("passed", c.passed).put("observed", c.observed)
+        .put("threshold", c.threshold).put("severity", c.severity)
+        .put("source", c.source)
+    }
+    val servingNode = record.putObject("serving")
+    serving match {
+      case Some(s) => servingNode.put("query", s.table).put("rows", s.rows)
+        .put("seconds", s.seconds).put("refreshed", true)
+      case None => servingNode.put("refreshed", false)
+        .put("reason", "pipeline_status BLOCKED")
+    }
+    val printer = new DefaultPrettyPrinter().withSeparators(
+      Separators.createDefaultInstance().withObjectFieldValueSpacing(Separators.Spacing.AFTER))
+    mapper.writer(printer).writeValue(Paths.get(outDir, "run_manifest.json").toFile, record)
     (manifest, status)
   }
 

@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The one session factory: its settings, that no main builds a
   * session of its own (the drift that left PipelineRun without the
-  * extensions and StreamBench without nanosAsLong), and that no
-  * operator falls back when the extensions are missing. */
+  * extensions and StreamBench without nanosAsLong), that no operator
+  * falls back when the extensions are missing, and that scan fan-out
+  * is decided by the planner alone. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the factory's session carries the extensions, nanosAsLong, UTC and n shuffle partitions") {
@@ -39,5 +40,21 @@ class GraftSessionSpec extends SparkSpec {
     // for sessions without it
     assert(filesWith("""functionExists\(""") === Nil)
     assert(filesWith("""extraStrategies""") === Nil)
+  }
+
+  test("no main source fans a frame out by hand: a keyless repartition is a single-file write") {
+    // plans.FanOutUnderSplitScans is the only round-robin fan-out; the
+    // exceptions write one file per index part
+    val root = Paths.get("src/main/scala")
+    val keyless = """\.repartition\(\s*[^,()"$]+\)""".r
+    val calls = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => keyless.findAllIn(Files.readString(p))
+        .map(m => root.relativize(p).toString -> m.replaceAll("\\s", "")))
+      .sorted
+    assert(calls === Seq(
+      "graft/operators/BloomIndex.scala" -> ".repartition(1)",
+      "graft/operators/BloomIndex.scala" -> ".repartition(1)",
+      "graft/operators/IvfIndex.scala" -> ".repartition(1)"))
   }
 }

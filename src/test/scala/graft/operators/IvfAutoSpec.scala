@@ -159,4 +159,12 @@ class IvfAutoSpec extends SparkSpec {
     assert(auto.nonEmpty)
     assert(auto === ref)
   }
+
+  test("an out-of-range p fails alike spelled as an Int or a Long literal") {
+    val probe = Seq((Seq(1L, 2L), Seq(Seq(1L, 0L)), Seq(1.0))).toDF("v", "book", "norms")
+    Seq("graft_ivf_top", "graft_ivf_top_l2").foreach { fn =>
+      graft.plans.LiteralSpelling.assertFailAlike(
+        p => probe.select(expr(s"$fn(v, book, norms, $p)")), "0", "p must be >= 1, got 0")
+    }
+  }
 }

@@ -55,4 +55,12 @@ class CmsSketchSpec extends SparkSpec {
     }
     assert(err.getMessage.toLowerCase.contains("depth"))
   }
+
+  test("out-of-range depth and width fail alike spelled as Int or Long literals") {
+    LiteralSpelling.assertFailAlike(
+      d => Seq("a").toDF("v").agg(expr(s"graft_cms(md5(v), $d, 16)")), "0", "32-char md5), got 0")
+    LiteralSpelling.assertFailAlike(
+      w => Seq("a").toDF("v").agg(expr(s"graft_cms(md5(v), 2, $w)")),
+      "0", "requires width > 0, got 0")
+  }
 }

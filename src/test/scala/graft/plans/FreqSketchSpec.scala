@@ -142,4 +142,10 @@ class FreqSketchSpec extends SparkSpec {
     val rt = agg.deserialize(agg.serialize(buf))
     assert(rt == buf)
   }
+
+  test("an out-of-range capacity fails alike spelled as an Int or a Long literal") {
+    LiteralSpelling.assertFailAlike(
+      c => Seq("a").toDF("v").agg(expr(s"graft_mg_sketch(v, $c)")),
+      "0", "requires capacity > 0, got 0")
+  }
 }

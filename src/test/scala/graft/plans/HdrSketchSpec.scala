@@ -104,4 +104,12 @@ class HdrSketchSpec extends SparkSpec {
     assert(err.getMessage.contains("graft_hdr") ||
       err.getCause != null && err.getCause.getMessage.contains("graft_hdr"))
   }
+
+  test("out-of-range b and pct fail alike spelled as Int or Long literals") {
+    LiteralSpelling.assertFailAlike(
+      b => spark.range(3).agg(expr(s"graft_hdr(id, $b, 50)")), "9", "sub-bucket bits, got 9")
+    LiteralSpelling.assertFailAlike(
+      p => spark.range(3).agg(expr(s"graft_hdr(id, 5, $p)")),
+      "0", "requires 1 <= pct <= 100, got 0")
+  }
 }

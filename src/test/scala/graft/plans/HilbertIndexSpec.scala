@@ -89,4 +89,10 @@ class HilbertIndexSpec extends SparkSpec {
       .collect()
     assert(got.head.isNullAt(0))
   }
+
+  test("out-of-range bits fail alike spelled as an Int or a Long literal") {
+    LiteralSpelling.assertFailAlike(
+      b => spark.range(3).select(expr(s"graft_hilbert(id, id, $b)")),
+      "32", "bits must be in [1, 31], got 32")
+  }
 }

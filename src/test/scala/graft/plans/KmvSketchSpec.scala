@@ -90,4 +90,9 @@ class KmvSketchSpec extends SparkSpec {
       .select(size(col("sketch"))).as[Int].head()
     assert(sk == k)
   }
+
+  test("an out-of-range k fails alike spelled as an Int or a Long literal") {
+    LiteralSpelling.assertFailAlike(
+      k => Seq(1L).toDF("v").agg(expr(s"graft_kmv(v, $k)")), "-3", "requires k > 0, got -3")
+  }
 }

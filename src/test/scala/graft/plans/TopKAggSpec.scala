@@ -97,4 +97,10 @@ class TopKAggSpec extends SparkSpec {
       .map(x => (x.getLong(0), x.getString(1)))
     assert(got === Seq((3L, "a")))
   }
+
+  test("an out-of-range k fails alike spelled as an Int or a Long literal") {
+    LiteralSpelling.assertFailAlike(
+      k => Seq((1.0, "a")).toDF("s", "p").agg(expr(s"graft_topk(s, p, $k)")),
+      "0", "requires k > 0, got 0")
+  }
 }

@@ -31,6 +31,33 @@ class PipelineObservedDqSpec extends SparkSpec {
     assert(sourceOf("relationships_customer_key") === "scan")
   }
 
+  test("runAll reads back every rebuilt table without starting a job") {
+    // a parquet read that infers its schema, or a count() of the
+    // written files, is bookkeeping: the schema is the one just
+    // written and the row count is observed by the write. Schema
+    // inference runs outside any SQL execution, so count those jobs;
+    // the writes, gate checks and serving query each run inside one.
+    val outside = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          outside.incrementAndGet()
+    }
+    val out = java.nio.file.Files.createTempDirectory("obsreadback").toString
+    spark.sparkContext.addSparkListener(listener)
+    val (manifest, verdict) =
+      try {
+        val run = Pipeline.runAll(spark, out, callEvents = 800)
+        org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+        run
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(verdict === "HEALTHY")
+    assert(manifest.map(_.table).toSet === Pipeline.lineage.keySet)
+    assert(outside.get === 0, s"${outside.get} jobs ran outside a SQL execution (read-back inference)")
+    // the observed row counts are the written files' counts
+    manifest.foreach(r => assert(r.rows === spark.read.parquet(s"$out/${r.table}").count(), r.table))
+  }
+
   test("observed gate ≡ scan gate (values, verdict), and saves the re-read bytes") {
     val out = java.nio.file.Files.createTempDirectory("obsgate").toString
     Pipeline.runAll(spark, out, callEvents = 800)
